@@ -1,12 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
-import graft.table.SpatialTable
+import graft.table.{Snapshots, SpatialTable}
 
 /**
  * The `spark.read.format("graft")` front door — the packaging analog of
@@ -57,7 +56,7 @@ class GraftDataSource extends DataSourceRegister
     val spark = sqlContext.sparkSession
     val (root, snap) = GraftRelation.resolve(spark, parameters)
     val p2 = parameters + ("snapshot" -> snap)
-    if (GraftRelation.isExtentManifest(spark, root, snap)) GeomGraftRelation(sqlContext, p2)
+    if (Snapshots.isExtent(spark, root, snap)) GeomGraftRelation(sqlContext, p2)
     else GraftRelation(sqlContext, p2)
   }
 
@@ -96,11 +95,8 @@ class GraftDataSource extends DataSourceRegister
           // the data sources maps and every delta-rebuilt index layout's
           // sources sidecar (ADVICE r4: a descendant can rewrite all its
           // data prefixes yet still inherit attr_buckets from here)
-          val refs = SpatialTable.snapshots(spark, root).filter(_ != snapshot).filter { s =>
-            if (GraftRelation.isExtentManifest(spark, root, s))
-              graft.table.GeomTable.referencedSnapshots(spark, root, s).contains(snapshot)
-            else SpatialTable.referencedSnapshots(spark, root, s).contains(snapshot)
-          }
+          val refs = SpatialTable.snapshots(spark, root).filter(_ != snapshot)
+            .filter(Snapshots.referencedSnapshots(spark, root, _).contains(snapshot))
           require(refs.isEmpty,
             s"cannot overwrite snapshot $snapshot: snapshot(s) ${refs.mkString(", ")} " +
               "reference its files (scoped-mutation descendants) — mutate forward or " +
@@ -108,22 +104,7 @@ class GraftDataSource extends DataSourceRegister
           // drop ALL of this snapshot's artifacts — data, metrics,
           // manifest, every index layout + its markers/sidecars, stats —
           // so nothing stale answers for the rewritten id
-          val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val indexDirs =
-            if (!f.exists(new Path(root))) Seq.empty
-            else f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith("index_"))
-              .map(d => s"$root/$d/snapshot=$snapshot")
-          val markers =
-            if (!f.exists(new Path(s"$root/_manifests"))) Seq.empty
-            else f.listStatus(new Path(s"$root/_manifests")).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith(s"$snapshot.attr_"))
-              .map(n => s"$root/_manifests/$n")
-          (Seq(s"$root/data/snapshot=$snapshot", s"$root/_metrics/snapshot=$snapshot",
-            s"$root/_stats/$snapshot.json",
-            s"$root/_manifests/$snapshot.json", s"$root/_manifests/$snapshot.committed") ++
-            indexDirs ++ markers)
-            .foreach(p => f.delete(new Path(p), true))
+          Snapshots.dropSnapshot(spark, root, snapshot)
         }
         val idCol = parameters.getOrElse("id", "id")
         val lonCol = parameters.getOrElse("lon", "lon")
@@ -251,23 +232,6 @@ object GraftRelation {
       SpatialTable.latestSnapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"no committed snapshots under $root")))
     (root, snap)
-  }
-
-  /** Extent (GeomTable) manifests never carry prefix_res; point
-    * (SpatialTable) manifests always do — one byte-level probe decides
-    * which relation serves the root. */
-  private[sources] def isExtentManifest(spark: org.apache.spark.sql.SparkSession,
-                                        root: String, snapshotId: String): Boolean = {
-    val p = new Path(s"$root/_manifests/$snapshotId.json")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(p), s"no manifest for snapshot $snapshotId under $root")
-    val in = f.open(p)
-    val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    // TOP-LEVEL field test, not a substring probe: both manifests embed
-    // the full Spark schema JSON, so a user column literally named
-    // "prefix_res" must not misroute the table (review r5 #5)
-    !new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt).has("prefix_res")
   }
 
   /** The filter subset the relations translate onto the inner scan;

@@ -1,36 +1,43 @@
 package graft.table
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.cells.Cells
 import graft.functions.StFunctions
 import graft.plans.ZQuery
+import graft.table.Snapshots.Key
 
 /**
- * The engine's table layer: Iceberg-style semantics (snapshots, manifest
+ * The engine's point table: Iceberg-style semantics (snapshots, manifest
  * pruning, idempotent commits, a metrics table) as a thin deterministic
  * layout over plain Parquet (SURVEY.md §7.0 — no Iceberg jars resolvable
  * offline, and the north rule wants the machinery from scratch anyway).
  *
  * Layout:
- *   <root>/data/snapshot=<id>/cell_prefix=<p>/...parquet
+ *   <root>/data/snapshot=<id>/[time_bin=<b>/]cell_prefix=<p>/...parquet
  *   <root>/_metrics/snapshot=<id>/...parquet   per-partition lineage:
- *       (cell_prefix, salt, rows, min_cell, max_cell)
- *   <root>/_manifests/<id>.json                snapshot manifest
- *   <root>/_manifests/<id>.committed           commit marker (last write)
+ *       ([time_bin,] cell_prefix, salt, rows, min_cell, max_cell)
+ *   <root>/_manifests/<id>.json + <id>.committed (marker, last write)
  *
- * Write path: rows gain cell (at `res`), salt = pmod(xxhash64(id), salts)
- * (the reference's shard byte, ShardStrategy.scala:53-55), cell_prefix =
- * parent cell at `prefixRes` (the partition/pruning granularity);
- * repartition by (cell_prefix, salt) — salting splits hot prefixes across
- * tasks — sorted by cell within partitions so Parquet row-group min/max
- * on `cell` enables range skipping inside each file.
+ * The snapshot store itself — manifest I/O and the atomic put, commit
+ * markers, the bucketed attribute/id index, scoped commits and the
+ * mutation entry points, reachability, expiry — is the shared core in
+ * [[Snapshots]]. This object keeps only what is point-specific:
  *
- * Checkpoint-resume: the commit marker is written last; `write` with an
- * existing marker is a no-op (idempotent re-run), so a failed job simply
- * re-runs — outputs are deterministic given (input, snapshotId).
+ *  - the key layout ([[Points]]): rows gain `cell` (at `res`), `salt` =
+ *    pmod(xxhash64(id), salts) (the reference's shard byte,
+ *    ShardStrategy.scala:53-55) and `cell_prefix` = the parent cell at
+ *    `prefixRes` (the partition/pruning granularity), plus `time_bin` on
+ *    temporal layouts; writes shuffle by (key, salt) — salting splits hot
+ *    prefixes across tasks — and sort by `cell` inside files so Parquet
+ *    row-group min/max enables range skipping; the `_metrics` lineage
+ *    table feeds the manifest's per-partition stats;
+ *  - the manifest fields `res`, `prefix_res`, `salts` (+ `period`, `dtg`);
+ *  - read-side pruning: cell_prefix cover + z-ranges on `cell`, the id
+ *    index lookups and the cost-planned query.
  */
 object SpatialTable {
 
@@ -39,38 +46,11 @@ object SpatialTable {
   /**
    * Everything a snapshot manifest records, parsed ONCE with a real JSON
    * parser (the r3 regex field-scrapes were fragile against schema
-   * growth — VERDICT r3 "What's wrong" #4).
-   *
-   * `sources` is the file-granular-mutation inheritance map: live
-   * cell_prefix -> the snapshot whose data directory PHYSICALLY holds
-   * that prefix's files. Empty for self-contained snapshots (every
-   * prefix lives under this snapshot's own directory — the plain
-   * `write` layout). A scoped mutation commits only the touched
-   * prefixes' files and carries every untouched prefix here BY
-   * REFERENCE; the map is kept flattened (values are always physical
-   * holders, never another level of indirection), so chains of
-   * mutations resolve in O(1).
+   * growth — VERDICT r3 "What's wrong" #4). `sources` (plain) and
+   * `tsources` (temporal) are the scoped-mutation inheritance map — live
+   * key -> the snapshot whose data directory PHYSICALLY holds it; empty
+   * for self-contained snapshots.
    */
-  /** A data-partition key: `cell_prefix` for plain layouts, the
-    * (time_bin, cell_prefix) pair for temporal ones. `relpath` is the
-    * directory fragment under the snapshot's data dir.
-    *
-    * Scale note: driver-side key lists and the manifest partitions
-    * array are bounded by the PARTITION count, which `prefixRes` (and
-    * the time period) set deliberately — at res 4 that is tens of
-    * thousands of prefixes worldwide, and a sane temporal config keeps
-    * bins×prefixes in the 10^5-10^6 range (the same order Iceberg
-    * carries in its manifests). Choosing prefixRes so partitions stay
-    * file-sized (hundreds of MB each at the target scale) keeps both
-    * the manifest and these collects trivially small next to the data. */
-  private[graft] final case class PKey(bin: Option[Int], prefix: Long) {
-    def relpath: String =
-      bin.map(b => s"time_bin=$b/").getOrElse("") + s"cell_prefix=$prefix"
-    /** The manifest sources-map key: plain prefixes keep the bare number
-      * (round-4 format compatibility); temporal keys are "bin/prefix". */
-    def sourceKey: String = bin.map(b => s"$b/$prefix").getOrElse(prefix.toString)
-  }
-
   final case class ManifestInfo(snapshot: String, res: Int, prefixRes: Int, salts: Int,
                                 period: Option[String], dtg: Option[String],
                                 schema: StructType,
@@ -83,14 +63,6 @@ object SpatialTable {
       * self-contained snapshots). Plain layouts only. */
     def physical: Map[Long, String] =
       if (scoped) sources else partitions.keys.map(_ -> snapshot).toMap
-    /** Partition key -> physical holder, layout-agnostic. Empty for
-      * legacy temporal manifests written before partitions were
-      * recorded (callers must fall back to whole-table paths). */
-    private[graft] def physicalKeys: Map[PKey, String] =
-      if (period.nonEmpty) {
-        val m = if (scoped) tsources else tpartitions.keys.map(_ -> snapshot).toMap
-        m.map { case ((b, p), s) => PKey(Some(b), p) -> s }
-      } else physical.map { case (p, s) => PKey(None, p) -> s }
     /** The partition (directory) columns, outermost first. */
     def partitionCols: Seq[String] =
       if (period.nonEmpty) Seq("time_bin", "cell_prefix") else Seq("cell_prefix")
@@ -101,151 +73,132 @@ object SpatialTable {
       schema.fieldNames.filterNot(partitionCols.contains).toSeq ++ partitionCols
   }
 
-  /** Parse a snapshot's manifest (shared by every entry point). */
-  def manifestInfo(spark: SparkSession, root: String, snapshotId: String): ManifestInfo = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(manifestString(spark, root, snapshotId))
+  /** One manifest read: the public view plus the core's. */
+  private def load(spark: SparkSession, root: String,
+                   snapshotId: String): (ManifestInfo, Snapshots.Parts) = {
+    val n = Snapshots.manifestNode(spark, root, snapshotId)
+    val p = Snapshots.parse(n, snapshotId, "cell_prefix", temporal = n.has("period"))
     def intField(name: String): Int = Option(n.get(name)).map(_.asInt)
       .getOrElse(throw new IllegalStateException(s"manifest missing $name"))
-    val schema = DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType]
-    // entries with a time_bin belong to a temporal layout's key space
-    var parts = Map.empty[Long, Long]
-    var tparts = Map.empty[(Int, Long), Long]
-    Option(n.get("partitions")).foreach { arr =>
-      (0 until arr.size).foreach { i =>
-        val e = arr.get(i)
-        val p = e.get("cell_prefix").asLong
-        val rows = e.get("rows").asLong
-        Option(e.get("time_bin")) match {
-          case Some(b) => tparts += (b.asInt, p) -> rows
-          case None => parts += p -> rows
-        }
-      }
-    }
-    // sources keys: bare prefix (plain) or "bin/prefix" (temporal)
-    var sources = Map.empty[Long, String]
-    var tsources = Map.empty[(Int, Long), String]
-    Option(n.get("sources")).foreach { o =>
-      val it = o.fields()
-      while (it.hasNext) {
-        val e = it.next()
-        e.getKey.split('/') match {
-          case Array(b, p) => tsources += (b.toInt, p.toLong) -> e.getValue.asText
-          case Array(p) => sources += p.toLong -> e.getValue.asText
-          case other => throw new IllegalStateException(
-            s"bad sources key '${other.mkString("/")}'")
-        }
-      }
-    }
-    ManifestInfo(n.get("snapshot").asText, intField("res"), intField("prefix_res"),
-      intField("salts"),
-      Option(n.get("period")).map(_.asText), Option(n.get("dtg")).map(_.asText),
-      schema, parts, sources,
-      scoped = Option(n.get("sources")).isDefined,
-      tpartitions = tparts, tsources = tsources)
+    def plain[V](m: Map[Key, V]) = m.collect { case (Key(_, None, v), x) => v -> x }
+    def binned[V](m: Map[Key, V]) = m.collect { case (Key(_, Some(b), v), x) => (b, v) -> x }
+    val rows = p.partitions.map { case (k, _) => k -> p.rows(k) }
+    (ManifestInfo(n.get("snapshot").asText, intField("res"), intField("prefix_res"),
+      intField("salts"), Option(n.get("period")).map(_.asText), Option(n.get("dtg")).map(_.asText),
+      p.schema.getOrElse(throw new IllegalStateException("manifest missing schema")),
+      plain(rows), plain(p.sources), p.scoped, binned(rows), binned(p.sources)), p)
   }
 
-  private def fs(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Parse a snapshot's manifest (shared by every entry point). */
+  def manifestInfo(spark: SparkSession, root: String, snapshotId: String): ManifestInfo =
+    load(spark, root, snapshotId)._1
+
+  /** The engine-derived columns (never user data). */
+  private val DerivedCols = Set("cell", "cell_prefix", "salt", "time_bin")
+
+  /** The point key layout for one set of layout parameters. */
+  private final class Points(res: Int, prefixRes: Int, salts: Int,
+                             period: Option[String], dtg: Option[String],
+                             idCol: String, lonCol: String, latCol: String)
+      extends Snapshots.KeySpace {
+    def this(i: ManifestInfo, idCol: String, lonCol: String, latCol: String) =
+      this(i.res, i.prefixRes, i.salts, i.period, i.dtg, idCol, lonCol, latCol)
+    val keyCol = "cell_prefix"
+    val temporal: Boolean = period.nonEmpty
+    val sortCol = "cell"
+    val saltCols = Seq("salt")
+    def fanout: Int = salts
+    val derivedCols: Set[String] = DerivedCols
+
+    def derive(df: DataFrame): DataFrame = {
+      val base = df
+        .withColumn("cell", StFunctions.stCellOfXY(col(lonCol), col(latCol), lit(res)))
+        .withColumn("cell_prefix", StFunctions.stCellParent(col("cell"), lit(prefixRes)))
+        .withColumn("salt", pmod(xxhash64(col(idCol)), lit(salts)).cast("int"))
+      if (period.isEmpty) base
+      else base.withColumn("time_bin", StFunctions.stZ3Bin(
+        unix_millis(col(dtg.get).cast("timestamp")), lit(period.get)))
+    }
+
+    def fields: Seq[(String, Any)] =
+      Seq("res" -> res, "prefix_res" -> prefixRes, "salts" -> salts) ++
+        period.map("period" -> _) ++ dtg.map("dtg" -> _)
+
+    /** Per-(key, salt) lineage metrics (row counts + cell ranges,
+      * readable as a table for audits and coarse planning): recomputed
+      * from the files just written, carried through for inherited keys —
+      * their provenance column keeps the PHYSICAL holder, so the lineage
+      * table shows where files live. The manifest entries aggregate them
+      * per key. */
+    def partitionStats(spark: SparkSession, root: String, to: String, written: DataFrame,
+                       carried: Seq[Key],
+                       from: Option[Snapshots.Parts]): Map[Key, Seq[(String, Long)]] = {
+      val keyCols = partitionCols
+      val fresh = written.groupBy((keyCols :+ "salt").map(col): _*)
+        .agg(count(lit(1)).as("rows"), min("cell").as("min_cell"), max("cell").as("max_cell"))
+        .withColumn("snapshot", lit(to))
+      val metrics =
+        if (carried.isEmpty) fresh
+        else {
+          val rows = carried.map(k => if (temporal) Row(k.bin.get, k.value) else Row(k.value))
+          val schema = StructType((if (temporal) Seq(StructField("time_bin", IntegerType)) else Nil) :+
+            StructField("cell_prefix", LongType))
+          val keys = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+          fresh.unionByName(spark.read.parquet(s"$root/_metrics/snapshot=${from.get.snapshot}")
+            .join(broadcast(keys), keyCols, "left_semi"))
+        }
+      metrics.coalesce(1).write.mode("overwrite").parquet(s"$root/_metrics/snapshot=$to")
+      val o = keyCols.size
+      spark.read.parquet(s"$root/_metrics/snapshot=$to").groupBy(keyCols.map(col): _*)
+        .agg(sum("rows").as("rows"), min("min_cell").as("min_cell"), max("max_cell").as("max_cell"))
+        .collect().map { r =>
+          keyOf(r) -> Seq("rows" -> r.getLong(o), "min_cell" -> r.getLong(o + 1),
+            "max_cell" -> r.getLong(o + 2))
+        }.toMap
+    }
+
+    def statsDelta(spark: SparkSession, root: String, from: String, to: String,
+                   removed: DataFrame, added: DataFrame): Unit =
+      TableStats.applyMutationDelta(spark, root, from, to, removed, added, lonCol, latCol)
+  }
 
   def isCommitted(spark: SparkSession, root: String, snapshotId: String): Boolean =
-    fs(spark, root).exists(new Path(s"$root/_manifests/$snapshotId.committed"))
+    Snapshots.isCommitted(spark, root, snapshotId)
 
   /**
    * Write a snapshot. `idCol` seeds the salt; `lonCol`/`latCol` derive the
    * cell. Returns the snapshot descriptor (pre-existing one on resume).
+   * Checkpoint-resume: the commit marker is written last; `write` with an
+   * existing marker is a no-op (idempotent re-run), so a failed job simply
+   * re-runs — outputs are deterministic given (input, snapshotId).
    */
   def write(spark: SparkSession, df: DataFrame, root: String, snapshotId: String,
             idCol: String, lonCol: String, latCol: String,
             res: Int = 9, prefixRes: Int = 4, salts: Int = 4,
             partitions: Int = 32): Snapshot = {
-    val snap = Snapshot(snapshotId, root, prefixRes, res, salts)
-    if (isCommitted(spark, root, snapshotId)) return snap // resume: done
-
-    val indexed = df
-      .withColumn("cell", StFunctions.stCellOfXY(col(lonCol), col(latCol), lit(res)))
-      .withColumn("cell_prefix", StFunctions.stCellParent(col("cell"), lit(prefixRes)))
-      .withColumn("salt", pmod(xxhash64(col(idCol)), lit(salts)).cast("int"))
-
-    val dataPath = s"$root/data/snapshot=$snapshotId"
-    // the sort MUST lead with the partition column: partitionBy's writer
-    // re-sorts any task whose rows are not already ordered by the
-    // partition expressions, which would silently destroy the cell
-    // ordering (and its row-group min/max stats) otherwise
-    indexed
-      .repartition(partitions, col("cell_prefix"), col("salt"))
-      .sortWithinPartitions("cell_prefix", "cell")
-      .write.mode("overwrite")
-      .partitionBy("cell_prefix")
-      .parquet(dataPath)
-
-    // per-partition lineage metrics (row counts + cell ranges): readable
-    // as a table, used for audits and coarse planning. The schema is
-    // KNOWN (we just wrote it) — passing it skips footer inference and
-    // keeps an empty write (no data files, schema-only table) valid
-    val metrics = spark.read.schema(indexed.schema).parquet(dataPath)
-      .groupBy("cell_prefix", "salt")
-      .agg(count(lit(1)).as("rows"), min("cell").as("min_cell"), max("cell").as("max_cell"))
-      .withColumn("snapshot", lit(snapshotId))
-    metrics.coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/_metrics/snapshot=$snapshotId")
-
-    // manifest: schema + per-prefix stats for file-level pruning
-    val prefixStats = spark.read.parquet(s"$root/_metrics/snapshot=$snapshotId")
-      .groupBy("cell_prefix")
-      .agg(sum("rows").as("rows"), min("min_cell").as("min_cell"), max("max_cell").as("max_cell"))
-      .collect()
-      .map(r => s"""{"cell_prefix":${r.getLong(0)},"rows":${r.getLong(1)},"min_cell":${r.getLong(2)},"max_cell":${r.getLong(3)}}""")
-      .mkString("[", ",", "]")
-    val manifest =
-      s"""{"snapshot":"$snapshotId","res":$res,"prefix_res":$prefixRes,"salts":$salts,
-         |"schema":${ujsonSchema(indexed)},"partitions":$prefixStats}""".stripMargin
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_manifests"))
-    writeString(f, s"$root/_manifests/$snapshotId.json", manifest)
-    writeString(f, s"$root/_manifests/$snapshotId.committed", "") // commit marker LAST
-    snap
-  }
-
-  private def ujsonSchema(df: DataFrame): String = df.schema.json
-
-  private def writeString(f: FileSystem, path: String, s: String): Unit = {
-    val out = f.create(new Path(path), true)
-    out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    Snapshots.writeSnapshot(spark, root, snapshotId,
+      new Points(res, prefixRes, salts, None, None, idCol, lonCol, latCol), df, partitions)
+    Snapshot(snapshotId, root, prefixRes, res, salts)
   }
 
   /**
    * Full snapshot scan. Self-contained snapshots read their own data
    * directory; snapshots produced by a scoped mutation resolve the
-   * manifest's `sources` map — each live prefix's directory is listed
-   * from the snapshot that physically holds it, under one shared
-   * basePath so cell_prefix stays a partition column (directory pruning
-   * and the z-range row-group skipping behave identically either way).
-   * The manifest schema is passed explicitly: no footer inference, and
-   * the partition columns keep their written types regardless of which
-   * value subset the listing happens to contain.
+   * manifest's `sources` map through the core — each live prefix's
+   * directory is listed from the snapshot that physically holds it,
+   * under one shared basePath so cell_prefix stays a partition column
+   * (directory pruning and the z-range row-group skipping behave
+   * identically either way).
    */
   def read(spark: SparkSession, root: String, snapshotId: String): DataFrame = {
-    val info = manifestInfo(spark, root, snapshotId)
-    if (!info.scoped) spark.read.parquet(s"$root/data/snapshot=$snapshotId")
-    else readResolved(spark, root, info)
+    val (info, parts) = load(spark, root, snapshotId)
+    readParsed(spark, root, info, parts)
   }
 
-  private def emptyOf(spark: SparkSession, info: ManifestInfo): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(info.readOrder.map(f => info.schema(f))))
-
-  private def readResolved(spark: SparkSession, root: String, info: ManifestInfo): DataFrame = {
-    val paths = info.physicalKeys.toSeq.sortBy(_._1.relpath)
-      .map { case (k, src) => s"$root/data/snapshot=$src/${k.relpath}" }
-    if (paths.isEmpty) emptyOf(spark, info) // fully-deleted snapshot: schema-only
-    else {
-      val withSnap = StructType(info.schema.fields :+ StructField("snapshot", StringType))
-      spark.read.schema(withSnap).option("basePath", s"$root/data").parquet(paths: _*)
-        .select(info.readOrder.map(col): _*)
-    }
-  }
+  private def readParsed(spark: SparkSession, root: String, info: ManifestInfo,
+                         parts: Snapshots.Parts): DataFrame =
+    if (!info.scoped) spark.read.parquet(s"$root/data/snapshot=${parts.snapshot}")
+    else Snapshots.readData(spark, root, parts)
 
   /**
    * Evolved-table view across ALL committed snapshots — the reference's
@@ -315,60 +268,18 @@ object SpatialTable {
    * time interval prunes whole day/week/month directories BEFORE the
    * spatial pruning — at 100 TB a one-week query over a year of data
    * never lists ~98% of the files. Within files rows stay cell-sorted
-   * for z-range row-group skipping, exactly like `write`.
+   * for z-range row-group skipping, exactly like `write`; the manifest
+   * records per-(time_bin, cell_prefix) stats, what scoped mutations
+   * resolve live partitions from.
    */
   def writeTemporal(spark: SparkSession, df: DataFrame, root: String, snapshotId: String,
                     idCol: String, lonCol: String, latCol: String, dtgCol: String,
                     period: String = "day", res: Int = 9, prefixRes: Int = 4,
                     salts: Int = 4, partitions: Int = 32): Snapshot = {
-    val snap = Snapshot(snapshotId, root, prefixRes, res, salts)
-    if (isCommitted(spark, root, snapshotId)) return snap
-
-    val indexed = df
-      .withColumn("cell", StFunctions.stCellOfXY(col(lonCol), col(latCol), lit(res)))
-      .withColumn("cell_prefix", StFunctions.stCellParent(col("cell"), lit(prefixRes)))
-      .withColumn("salt", pmod(xxhash64(col(idCol)), lit(salts)).cast("int"))
-      .withColumn("time_bin", StFunctions.stZ3Bin(
-        unix_millis(col(dtgCol).cast("timestamp")), lit(period)))
-
-    val dataPath = s"$root/data/snapshot=$snapshotId"
-    // lead with the partition columns so the writer keeps our ordering
-    // (same rationale as [[write]]): files stay cell-sorted for
-    // row-group range skipping
-    indexed
-      .repartition(partitions, col("time_bin"), col("cell_prefix"), col("salt"))
-      .sortWithinPartitions("time_bin", "cell_prefix", "cell")
-      .write.mode("overwrite")
-      .partitionBy("time_bin", "cell_prefix")
-      .parquet(dataPath)
-
-    val metrics = spark.read.schema(indexed.schema).parquet(dataPath)
-      .groupBy("time_bin", "cell_prefix", "salt")
-      .agg(count(lit(1)).as("rows"), min("cell").as("min_cell"), max("cell").as("max_cell"))
-      .withColumn("snapshot", lit(snapshotId))
-    metrics.coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/_metrics/snapshot=$snapshotId")
-
-    // per-(time_bin, cell_prefix) stats in the manifest — what scoped
-    // mutations resolve live partitions from (the temporal analog of
-    // write()'s partitions array)
-    val partStats = spark.read.parquet(s"$root/_metrics/snapshot=$snapshotId")
-      .groupBy("time_bin", "cell_prefix")
-      .agg(sum("rows").as("rows"), min("min_cell").as("min_cell"), max("max_cell").as("max_cell"))
-      .collect()
-      .sortBy(r => (r.getInt(0), r.getLong(1)))
-      .map(r => s"""{"time_bin":${r.getInt(0)},"cell_prefix":${r.getLong(1)},""" +
-        s""""rows":${r.getLong(2)},"min_cell":${r.getLong(3)},"max_cell":${r.getLong(4)}}""")
-      .mkString("[", ",", "]")
-    val manifest =
-      s"""{"snapshot":"$snapshotId","res":$res,"prefix_res":$prefixRes,"salts":$salts,
-         |"period":"$period","dtg":"$dtgCol",
-         |"schema":${ujsonSchema(indexed)},"partitions":$partStats}""".stripMargin
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_manifests"))
-    writeString(f, s"$root/_manifests/$snapshotId.json", manifest)
-    writeString(f, s"$root/_manifests/$snapshotId.committed", "")
-    snap
+    Snapshots.writeSnapshot(spark, root, snapshotId,
+      new Points(res, prefixRes, salts, Some(period), Some(dtgCol), idCol, lonCol, latCol),
+      df, partitions)
+    Snapshot(snapshotId, root, prefixRes, res, salts)
   }
 
   /**
@@ -383,29 +294,26 @@ object SpatialTable {
                    lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     require(endMillis > startMillis, s"empty interval: $startMillis..$endMillis")
     val info = manifestInfo(spark, root, snapshotId)
-    val snap = Snapshot(snapshotId, root, info.prefixRes, info.res, info.salts)
     val period = info.period
       .getOrElse(throw new IllegalStateException("not a temporal layout (no period in manifest)"))
     val dtgCol = info.dtg.get
     val p = graft.cells.BinnedTime.period(period)
     val b0 = graft.cells.BinnedTime.toBinned(p, startMillis).bin.toInt
     val b1 = graft.cells.BinnedTime.toBinned(p, endMillis - 1).bin.toInt
-    prefixPrune(read(spark, root, snapshotId), bbox, snap.prefixRes)
+    prefixPrune(read(spark, root, snapshotId), bbox, info.prefixRes)
       .where(col("time_bin").between(b0, b1))
-      .where(ZQuery.cellFilter(col("cell"), bbox, snap.res))
+      .where(ZQuery.cellFilter(col("cell"), bbox, info.res))
       .where(col(lonCol).between(bbox._1, bbox._3) && col(latCol).between(bbox._2, bbox._4))
       .where(unix_millis(col(dtgCol).cast("timestamp")).between(startMillis, endMillis - 1))
   }
 
-  private def manifestString(spark: SparkSession, root: String, snapshotId: String): String = {
-    val f = fs(spark, root)
-    val p = new Path(s"$root/_manifests/$snapshotId.json")
-    val in = f.open(p)
-    val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-    in.readFully(bytes)
-    in.close()
-    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-  }
+  /** The default property mapping CQL geometries resolve through on a
+    * lon/lat table (shared by every CQL entry point). */
+  private def geomDefaults(df: DataFrame, lonCol: String,
+                           latCol: String): Map[String, org.apache.spark.sql.Column] =
+    if (df.columns.contains(lonCol) && df.columns.contains(latCol))
+      Map("geom" -> StFunctions.fn("st_makePoint")(col(lonCol), col(latCol)))
+    else Map.empty
 
   /**
    * QueryProcess analog (reference geomesa-process-vector/.../query/
@@ -418,14 +326,6 @@ object SpatialTable {
    * z-ranges, and cell_prefix directory pruning with no manual readBBox
    * call (plan-asserted in CqlSpec).
    */
-  /** The default property mapping CQL geometries resolve through on a
-    * lon/lat table (shared by every CQL entry point). */
-  private def geomDefaults(df: DataFrame, lonCol: String,
-                           latCol: String): Map[String, org.apache.spark.sql.Column] =
-    if (df.columns.contains(lonCol) && df.columns.contains(latCol))
-      Map("geom" -> StFunctions.fn("st_makePoint")(col(lonCol), col(latCol)))
-    else Map.empty
-
   def queryCql(spark: SparkSession, root: String, snapshotId: String, cql: String,
                lonCol: String = "lon", latCol: String = "lat",
                idColumn: String = "id",
@@ -437,46 +337,20 @@ object SpatialTable {
   /**
    * Attribute-index layout — the analog of the reference's
    * AttributeIndex (geomesa-index-api/.../attribute/AttributeIndex
-   * .scala:278-372: rows keyed attribute-first with tiered date/z).
-   * A second copy of the snapshot bucketed by the attribute's hash and
-   * SORTED by (attr, cell) inside each file, so a high-selectivity
-   * attribute predicate becomes: bucket-directory pruning (the
-   * `attr_bucket=` partition column) + Parquet row-group min/max
-   * skipping on the sorted attribute — instead of a full scan of the
-   * cell-ordered primary layout (whose files have useless attr stats).
-   * The tiered cell sort keeps the secondary scan spatially clustered
+   * .scala:278-372: rows keyed attribute-first with tiered date/z),
+   * built by the core: a copy of the snapshot bucketed by the
+   * attribute's hash and SORTED by (attr, [tier,] cell) inside each
+   * file, so a high-selectivity attribute predicate becomes bucket-
+   * directory pruning + row-group min/max skipping on the sorted
+   * attribute instead of a full scan of the cell-ordered primary layout.
+   * The trailing cell sort keeps the secondary scan spatially clustered
    * for the usual attribute+bbox combination.
    */
   def writeAttributeIndex(spark: SparkSession, root: String, snapshotId: String,
                           attrCol: String, buckets: Int = 16,
-                          tierCol: Option[String] = None): Unit = {
-    val marker = s"$root/_manifests/$snapshotId.attr_$attrCol.committed"
-    val f = fs(spark, root)
-    if (f.exists(new Path(marker))) return // resume: done
-    val data = read(spark, root, snapshotId)
-    // the reference's TIERED secondary sort (AttributeIndex rows are
-    // attr ++ date ++ z): with a tier column — typically the dtg — the
-    // files sort (attr, tier, cell), so an attr-equality + time-range
-    // scan also skips row groups on the tier's min/max stats. The sort
-    // MUST lead with the partition column: partitionBy's writer re-sorts
-    // any task whose rows are not already ordered by the partition
-    // expressions, which would silently destroy the inner ordering (and
-    // its row-group stats) otherwise.
-    val sortCols = (Seq("attr_bucket", attrCol) ++ tierCol.toSeq :+ "cell").map(col)
-    data
-      .withColumn("attr_bucket", pmod(xxhash64(col(attrCol)), lit(buckets)).cast("int"))
-      .repartition(buckets, col("attr_bucket"))
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite")
-      .partitionBy("attr_bucket")
-      .parquet(s"$root/index_$attrCol/snapshot=$snapshotId")
-    // the commit marker records the bucket count (readers must hash with
-    // the WRITTEN modulus, never a caller-supplied one — a mismatched
-    // modulus probes the wrong bucket and silently finds nothing) and,
-    // on a second line, the tier column, so mutation rebuilds preserve
-    // the tiered sort instead of silently demoting to (attr, cell)
-    writeString(f, marker, (buckets.toString +: tierCol.toSeq).mkString("\n"))
-  }
+                          tierCol: Option[String] = None): Unit =
+    Snapshots.writeIndex(spark, root, snapshotId, read(spark, root, snapshotId),
+      attrCol, buckets, tierCol, "cell")
 
   /** The bucket count an index layout was written with (from its commit
     * marker). None for pre-marker layouts — callers must then skip
@@ -484,58 +358,37 @@ object SpatialTable {
     * (a wrong modulus silently finds nothing). */
   def indexBuckets(spark: SparkSession, root: String, snapshotId: String,
                    attrCol: String): Option[Int] =
-    indexMarker(spark, root, snapshotId, attrCol).flatMap(_.headOption).map(_.toInt)
+    Snapshots.indexMarker(spark, root, snapshotId, attrCol).map(_._1)
 
   /** The tier column an index layout was written with (the second marker
     * line), if any — mutation rebuilds must reuse it. */
   def indexTier(spark: SparkSession, root: String, snapshotId: String,
                 attrCol: String): Option[String] =
-    indexMarker(spark, root, snapshotId, attrCol).flatMap(_.lift(1))
+    Snapshots.indexMarker(spark, root, snapshotId, attrCol).flatMap(_._2)
 
-  private def indexMarker(spark: SparkSession, root: String, snapshotId: String,
-                          attrCol: String): Option[Seq[String]] = {
-    val marker = new Path(s"$root/_manifests/$snapshotId.attr_$attrCol.committed")
-    val f = fs(spark, root)
-    if (!f.exists(marker)) None
-    else {
-      val in = f.open(marker)
-      val text = try {
-        new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      } finally in.close()
-      if (text.isEmpty) None else Some(text.linesIterator.toSeq)
-    }
-  }
+  private def indexRead(spark: SparkSession, root: String, id: String,
+                        attr: String): DataFrame =
+    Snapshots.readIndex(spark, root, load(spark, root, id)._2, attr)
+
+  private def bucketsOr(spark: SparkSession, root: String, id: String, attr: String,
+                        buckets: Int): Option[Int] =
+    if (buckets > 0) Some(buckets) else indexBuckets(spark, root, id, attr)
 
   /** Equality/range scan through the attribute index: bucket pruning
     * applies for equality (the hash bucket is known); range predicates
     * rely on the per-file sorted-attr row-group stats in every bucket. */
   def readByAttribute(spark: SparkSession, root: String, snapshotId: String,
-                      attrCol: String, value: Any, buckets: Int = 0): DataFrame = {
-    val b = if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, attrCol)
-    val idx = indexRead(spark, root, snapshotId, attrCol)
-    val pruned = b match {
-      case Some(n) => idx.where(col("attr_bucket") ===
-        pmod(xxhash64(typedLit(idx, attrCol, value)), lit(n)).cast("int"))
-      case None => idx // unknown modulus: sorted-file stats still skip
-    }
-    pruned.where(col(attrCol) === lit(value))
-  }
-
-  /** xxhash64 hashes by the literal's TYPE (an Int literal hashes
-    * differently from the Long column it targets), so the write-time
-    * bucket — computed from the column — only matches if the probe
-    * literal is cast to the column's exact dataType first. Without this,
-    * a caller passing `5` against a BIGINT id silently finds nothing. */
-  private def typedLit(idx: DataFrame, targetCol: String, value: Any) =
-    lit(value).cast(idx.schema(targetCol).dataType)
+                      attrCol: String, value: Any, buckets: Int = 0): DataFrame =
+    Snapshots.readByValue(indexRead(spark, root, snapshotId, attrCol), attrCol, value,
+      bucketsOr(spark, root, snapshotId, attrCol, buckets))
 
   def readAttributeRange(spark: SparkSession, root: String, snapshotId: String,
                          attrCol: String, lo: Any, hi: Any): DataFrame = {
     val idx = indexRead(spark, root, snapshotId, attrCol)
     // cast the bounds to the column's type so a string "10" against a
-    // BIGINT column compares numerically (same hazard typedLit guards)
-    idx.where(col(attrCol).between(typedLit(idx, attrCol, lo), typedLit(idx, attrCol, hi)))
+    // BIGINT column compares numerically
+    val dt = idx.schema(attrCol).dataType
+    idx.where(col(attrCol).between(lit(lo).cast(dt), lit(hi).cast(dt)))
   }
 
   /**
@@ -658,24 +511,27 @@ object SpatialTable {
   def readByIds(spark: SparkSession, root: String, snapshotId: String,
                 idCol: String, values: Seq[Any], buckets: Int = 0): DataFrame = {
     require(values.nonEmpty, "readByIds needs at least one id")
-    val idx = indexRead(spark, root, snapshotId, idCol)
     if (values.size > IdPredicateLimit) {
-      // render + cast through the column's own type: matches the
-      // typedLit hashing contract below, and ids are strings/integrals
-      // in practice (the reference's feature ids are strings)
-      val dt = idx.schema(idCol).dataType
-      val rows = values.distinct.map(v => Row(if (v == null) null else v.toString))
-      val ids = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField("__graft_idval", StringType))))
-        .select(col("__graft_idval").cast(dt).as(idCol))
+      // the probe keeps each id's own type (the type its literal would
+      // have) and readByIdsDf casts it to the column's type — the same
+      // cast(lit(v), type) the literal path below hashes and compares.
+      // A string rendering would be lossy (a binary id renders as
+      // "[B@...") and silently match nothing
+      val probes = values.distinct.filter(_ != null).groupBy(v => Literal(v).dataType).map {
+        case (t, vs) => spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 1),
+          StructType(Seq(StructField(idCol, t))))
+      }
+      val ids = probes.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], StructType(Seq(StructField(idCol, LongType)))))
       return readByIdsDf(spark, root, snapshotId, idCol, ids, buckets)
     }
-    val b = if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, idCol)
+    val idx = indexRead(spark, root, snapshotId, idCol)
+    val dt = idx.schema(idCol).dataType
+    val b = bucketsOr(spark, root, snapshotId, idCol, buckets)
     val pred = values.map { v =>
       val eq = col(idCol) === lit(v)
       b match {
-        case Some(n) =>
-          col("attr_bucket") === pmod(xxhash64(typedLit(idx, idCol, v)), lit(n)).cast("int") && eq
+        case Some(n) => col("attr_bucket") === Snapshots.bucketOf(lit(v).cast(dt), n) && eq
         case None => eq
       }
     }.reduce(_ || _)
@@ -689,14 +545,13 @@ object SpatialTable {
     * used, so every join key pair is exact. */
   def readByIdsDf(spark: SparkSession, root: String, snapshotId: String,
                   idCol: String, ids: DataFrame, buckets: Int = 0): DataFrame = {
-    val b = if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, idCol)
+    val b = bucketsOr(spark, root, snapshotId, idCol, buckets)
     val idx = indexRead(spark, root, snapshotId, idCol)
     val dt = idx.schema(idCol).dataType
     val probe = ids.select(col(idCol).cast(dt).as(idCol)).distinct()
     val joined = b match {
       case Some(n) =>
-        val keyed = probe.withColumn("attr_bucket",
-          pmod(xxhash64(col(idCol)), lit(n)).cast("int"))
+        val keyed = probe.withColumn("attr_bucket", Snapshots.bucketOf(col(idCol), n))
         idx.join(keyed, Seq("attr_bucket", idCol), "left_semi")
       case None => idx.join(probe, Seq(idCol), "left_semi")
     }
@@ -735,34 +590,21 @@ object SpatialTable {
   /** Secondary index layouts committed for a snapshot: column name ->
     * bucket count from the commit marker. */
   def indexedColumns(spark: SparkSession, root: String,
-                     snapshotId: String): Map[String, Option[Int]] = {
-    val f = fs(spark, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Map.empty
-    else f.listStatus(rootPath).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("index_") => n.stripPrefix("index_") }
-      .filter(a => f.exists(new Path(s"$root/_manifests/$snapshotId.attr_$a.committed")))
-      .map(a => a -> indexBuckets(spark, root, snapshotId, a))
-      .toMap
-  }
+                     snapshotId: String): Map[String, Option[Int]] =
+    Snapshots.indexedColumns(spark, root, snapshotId)
 
   /**
-   * Copy-on-write snapshot rewrite — the engine's single mutation
-   * primitive. The reference mutates features in place through a
-   * FeatureWriter (AccumuloFeatureWriterTest: updates preserve feature
-   * ids, a changed geometry/date issues delete keys so EVERY index table
-   * stays consistent, AccumuloDataStoreDeleteTest: removeFeatures). On
-   * an immutable columnar layout the equivalent is one distributed job:
-   * read the source snapshot, apply `transform` to the user columns, and
-   * commit the result as a NEW snapshot at the same (res, prefixRes,
-   * salts) — derived columns (cell/cell_prefix/salt) re-derive, so a
-   * moved geometry lands in its new cell and can never be found at the
-   * old one, and every secondary layout the source snapshot had is
-   * rebuilt (same bucket counts), keeping all indices consistent by
-   * construction rather than by delete-key bookkeeping. Old snapshots
-   * stay readable (time travel); commit markers make the whole rewrite
-   * idempotent/resumable like [[write]].
+   * Copy-on-write snapshot rewrite — the whole-table mutation primitive.
+   * The reference mutates features in place through a FeatureWriter
+   * (AccumuloFeatureWriterTest: updates preserve feature ids, a changed
+   * geometry/date issues delete keys so EVERY index table stays
+   * consistent). On an immutable columnar layout the equivalent is one
+   * distributed job: read the source snapshot, apply `transform` to the
+   * user columns, and commit the result as a NEW snapshot at the same
+   * layout parameters — derived columns re-derive, so a moved geometry
+   * lands in its new cell, and every secondary layout the source had is
+   * rebuilt (same bucket counts and tiers). Old snapshots stay readable
+   * (time travel); commit markers make the rewrite idempotent.
    */
   def rewrite(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
               transform: DataFrame => DataFrame,
@@ -771,11 +613,9 @@ object SpatialTable {
     require(fromSnapshot != toSnapshot, "rewrite must target a NEW snapshot id")
     require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
     val old = manifestInfo(spark, root, fromSnapshot)
-    // temporal layouts (writeTemporal) recommit as temporal: time_bin is
-    // DERIVED — it must re-derive from the (possibly updated) dtg, never
-    // survive as a stale data column, and the new snapshot must keep the
-    // time_bin directory partitioning + its period/dtg manifest fields
-    val base = read(spark, root, fromSnapshot).drop("cell", "cell_prefix", "salt", "time_bin")
+    // time_bin is DERIVED: temporal layouts recommit as temporal, with
+    // the bin re-derived from the (possibly updated) dtg
+    val base = read(spark, root, fromSnapshot).drop(DerivedCols.toSeq: _*)
     val snap = old.period match {
       case Some(p) =>
         writeTemporal(spark, transform(base), root, toSnapshot, idCol, lonCol, latCol,
@@ -798,331 +638,6 @@ object SpatialTable {
     snap
   }
 
-  // ---- file-granular (scoped) mutation engine --------------------------
-  //
-  // VERDICT r3's one remaining scale-killer was that every mutation was a
-  // whole-table copy-on-write: a one-row upsert re-wrote every data file,
-  // every index layout, and re-collected stats. The scoped engine below
-  // rewrites ONLY the (cell_prefix) directories the mutation touches and
-  // carries every untouched file into the new snapshot's manifest BY
-  // REFERENCE (`sources`), so mutation cost scales with |touched data|,
-  // not |table|. Reference semantics matched: row-granular
-  // update/delete/upsert with every index kept consistent
-  // (AccumuloFeatureWriterTest:52-171), via per-bucket index inheritance
-  // and expand-only writer-maintained stats.
-
-  /** The engine-derived columns (never user data). */
-  private val DerivedCols = Set("cell", "cell_prefix", "salt", "time_bin")
-
-  /** Add the engine-derived placement columns (cell, cell_prefix, salt,
-    * and time_bin on temporal layouts) for a snapshot's layout
-    * parameters. ONE implementation on purpose: commitScoped's write
-    * path and the entry points' partition-key probes must agree
-    * byte-for-byte, or a probe could miss partitions the write creates
-    * (silently corrupting the sources map). */
-  private def withDerived(info: ManifestInfo, df: DataFrame,
-                          idCol: String, lonCol: String, latCol: String): DataFrame = {
-    val base = df
-      .withColumn("cell", StFunctions.stCellOfXY(col(lonCol), col(latCol), lit(info.res)))
-      .withColumn("cell_prefix", StFunctions.stCellParent(col("cell"), lit(info.prefixRes)))
-      .withColumn("salt", pmod(xxhash64(col(idCol)), lit(info.salts)).cast("int"))
-    if (info.period.isEmpty) base
-    else base.withColumn("time_bin", StFunctions.stZ3Bin(
-      unix_millis(col(info.dtg.get).cast("timestamp")), lit(info.period.get)))
-  }
-
-  private def readFileString(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  // NOT ".json": snapshots() recognizes a snapshot by the
-  // (<id>.committed, <id>.json) pair, and index layouts commit under
-  // markers named <snapshot>.attr_<col>.committed — a .json sidecar
-  // there would make the layout masquerade as a snapshot
-  private def indexJsonPath(root: String, id: String, attr: String) =
-    s"$root/_manifests/$id.attr_$attr.sources"
-
-  /** attr_bucket -> physical snapshot for an index layout: the sources
-    * sidecar when the layout was delta-rebuilt, else its own directory
-    * listing (self-contained). */
-  private def indexPhysical(spark: SparkSession, root: String, id: String,
-                            attr: String): Map[Int, String] = {
-    val f = fs(spark, root)
-    val jp = new Path(indexJsonPath(root, id, attr))
-    if (f.exists(jp)) {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readFileString(f, jp))
-      val it = n.get("sources").fields()
-      val b = Map.newBuilder[Int, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey.toInt -> e.getValue.asText }
-      b.result()
-    } else {
-      val dir = new Path(s"$root/index_$attr/snapshot=$id")
-      if (!f.exists(dir)) Map.empty
-      else f.listStatus(dir).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("attr_bucket=") =>
-          s.stripPrefix("attr_bucket=").toInt -> id }
-        .toMap
-    }
-  }
-
-  /** Resolution-aware index layout scan (the [[readResolved]] analog for
-    * `index_<attr>` layouts): plain directory read for self-contained
-    * layouts, per-bucket path resolution for delta-rebuilt ones. */
-  private def indexRead(spark: SparkSession, root: String, id: String,
-                        attr: String): DataFrame = {
-    val f = fs(spark, root)
-    if (!f.exists(new Path(indexJsonPath(root, id, attr)))) {
-      // explicit schema, never inference: an index built on an EMPTY
-      // snapshot is a directory with no parquet files, and inference
-      // would crash every later lookup instead of answering empty
-      // (review r5b #1 — found on the GeomTable copy, same hazard here)
-      val info = manifestInfo(spark, root, id)
-      val order = info.readOrder :+ "attr_bucket"
-      spark.read
-        .schema(StructType(info.schema.fields :+ StructField("attr_bucket", IntegerType)))
-        .parquet(s"$root/index_$attr/snapshot=$id")
-        .select(order.map(col): _*)
-    } else {
-      val info = manifestInfo(spark, root, id)
-      val order = info.readOrder :+ "attr_bucket"
-      val phys = indexPhysical(spark, root, id, attr)
-      if (phys.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(info.readOrder.map(c => info.schema(c)) :+
-            StructField("attr_bucket", IntegerType)))
-      else {
-        val schema = StructType(info.schema.fields :+
-          StructField("attr_bucket", IntegerType) :+ StructField("snapshot", StringType))
-        val paths = phys.toSeq.sortBy(_._1)
-          .map { case (b, src) => s"$root/index_$attr/snapshot=$src/attr_bucket=$b" }
-        spark.read.schema(schema).option("basePath", s"$root/index_$attr").parquet(paths: _*)
-          .select(order.map(col): _*)
-      }
-    }
-  }
-
-  /**
-   * Delta-scoped secondary-index rebuild: only the attr_buckets where a
-   * mutated row's attribute value hashes (old value OR new value) are
-   * rewritten — their content is the source bucket minus removed ids
-   * plus the added rows — and every untouched bucket is inherited by
-   * reference through the index sources sidecar. The bucket modulus and
-   * tier column are preserved from the source layout's commit marker.
-   */
-  private def rebuildIndexScoped(spark: SparkSession, root: String, from: String, to: String,
-                                 attr: String, removed: DataFrame, addedIndexed: DataFrame,
-                                 idCol: String): Unit = {
-    val f = fs(spark, root)
-    val marker = s"$root/_manifests/$to.attr_$attr.committed"
-    if (f.exists(new Path(marker))) return // resume: done
-    val n = indexBuckets(spark, root, from, attr).getOrElse(16)
-    val tier = indexTier(spark, root, from, attr)
-    def bucketOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(n)).cast("int")
-    val affected: Set[Int] =
-      removed.select(bucketOf(col(attr)).as("b"))
-        .unionByName(addedIndexed.select(bucketOf(col(attr)).as("b")))
-        .distinct().collect().map(_.getInt(0)).toSet
-    val phys = indexPhysical(spark, root, from, attr)
-    val info = manifestInfo(spark, root, from)
-    val order = info.readOrder :+ "attr_bucket"
-    val rebuildOld = affected.intersect(phys.keySet).toSeq.sorted
-    if (affected.nonEmpty) {
-      val oldRows =
-        if (rebuildOld.isEmpty) None
-        else {
-          val schema = StructType(info.schema.fields :+
-            StructField("attr_bucket", IntegerType) :+ StructField("snapshot", StringType))
-          Some(spark.read.schema(schema).option("basePath", s"$root/index_$attr")
-            .parquet(rebuildOld.map(b => s"$root/index_$attr/snapshot=${phys(b)}/attr_bucket=$b"): _*)
-            .select(order.map(col): _*)
-            .join(removed.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-            .select(order.map(col): _*))
-        }
-      val addedRows = addedIndexed.withColumn("attr_bucket", bucketOf(col(attr)))
-        .select(order.map(col): _*)
-      val union = oldRows.map(_.unionByName(addedRows)).getOrElse(addedRows)
-      val sortCols = (Seq("attr_bucket", attr) ++ tier.toSeq :+ "cell").map(col)
-      union.repartition(math.max(1, affected.size), col("attr_bucket"))
-        .sortWithinPartitions(sortCols: _*)
-        .write.mode("overwrite").partitionBy("attr_bucket")
-        .parquet(s"$root/index_$attr/snapshot=$to")
-    }
-    // which affected buckets actually got files (an emptied bucket is
-    // simply dropped from the map)?
-    val outDir = new Path(s"$root/index_$attr/snapshot=$to")
-    val writtenBuckets: Set[Int] =
-      if (!f.exists(outDir)) Set.empty
-      else f.listStatus(outDir).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("attr_bucket=") =>
-          s.stripPrefix("attr_bucket=").toInt }.toSet
-    val sourcesMap: Map[Int, String] =
-      (phys -- affected) ++ writtenBuckets.map(_ -> to).toMap
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    val srcs = node.putObject("sources")
-    sourcesMap.toSeq.sortBy(_._1).foreach { case (b, s) => srcs.put(b.toString, s) }
-    writeString(f, indexJsonPath(root, to, attr), mapper.writeValueAsString(node))
-    writeString(f, marker, (n.toString +: tier.toSeq).mkString("\n"))
-  }
-
-  /**
-   * The scoped-commit engine shared by [[deleteWhere]], [[updateWhere]]
-   * and [[upsert]] on plain (non-temporal) layouts.
-   *
-   * `p0` — the prefixes whose source rows feed `transform` (every
-   * prefix holding a mutated row; the caller derives it from the
-   * predicate's matched rows, so a spatially-scoped predicate computes
-   * it through the pruned scan). `transform` maps those prefixes' USER
-   * rows to their replacement rows. `removed`/`addedUser` are the old
-   * and new versions of the mutated rows (for index delta + stats
-   * delta). `mayMove = true` runs the mover closure: a transformed row
-   * whose re-derived cell_prefix lands OUTSIDE p0 pulls that target
-   * prefix into the rewrite (its untouched rows merge in), so a moved
-   * geometry can never be lost or duplicated.
-   *
-   * Commit order mirrors [[write]]: data, metrics, manifest, index
-   * layouts, stats, then the commit marker LAST — a crash anywhere
-   * re-runs idempotently (all outputs deterministic given the source
-   * snapshot and inputs).
-   */
-  private def commitScoped(spark: SparkSession, root: String, from: String, to: String,
-                           p0: Seq[PKey], transform: DataFrame => DataFrame,
-                           removed: DataFrame, addedUser: Option[DataFrame],
-                           mayMove: Boolean,
-                           idCol: String, lonCol: String, latCol: String,
-                           partitions: Int): Snapshot = {
-    require(from != to, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, from), s"source snapshot $from not committed")
-    val info = manifestInfo(spark, root, from)
-    val temporal = info.period.nonEmpty
-    val snap = Snapshot(to, root, info.prefixRes, info.res, info.salts)
-    if (isCommitted(spark, root, to)) return snap
-
-    val keyCols = info.partitionCols
-    val srcPhys: Map[PKey, String] = info.physicalKeys
-    val p0live = p0.distinct.filter(srcPhys.contains)
-    val userFields = info.schema.fields.filterNot(fld => DerivedCols(fld.name))
-    def emptyUser = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(userFields))
-    val withSnap = StructType(info.schema.fields :+ StructField("snapshot", StringType))
-    def srcRows(keys: Seq[PKey]): DataFrame =
-      if (keys.isEmpty) emptyUser
-      else spark.read.schema(withSnap).option("basePath", s"$root/data")
-        .parquet(keys.sortBy(_.relpath)
-          .map(k => s"$root/data/snapshot=${srcPhys(k)}/${k.relpath}"): _*)
-        .select(userFields.toSeq.map(fld => col(fld.name)): _*)
-    def index(df: DataFrame): DataFrame = withDerived(info, df, idCol, lonCol, latCol)
-
-    val out0 = index(transform(srcRows(p0live)))
-    val (newData, pTouched) =
-      if (!mayMove) (out0, p0.distinct)
-      else {
-        // mover closure: one tiny aggregate over the transformed rows
-        val p1 = keysIn(info, out0)
-        val extra = (p1.toSet -- p0live.toSet).toSeq.filter(srcPhys.contains)
-        (if (extra.isEmpty) out0 else out0.unionByName(index(srcRows(extra))),
-          (p0 ++ p1).distinct)
-      }
-
-    val dataPath = s"$root/data/snapshot=$to"
-    // shuffle width scales with |touched partitions|, never the table
-    val nParts = math.max(1, math.min(partitions, pTouched.size.max(1) * info.salts))
-    newData.repartition(nParts, (keyCols :+ "salt").map(col): _*)
-      .sortWithinPartitions((keyCols :+ "cell").map(col): _*)
-      .write.mode("overwrite").partitionBy(keyCols: _*).parquet(dataPath)
-
-    // metrics: recompute rewritten partitions from the files just
-    // written, carry untouched ones through (the provenance column keeps
-    // the PHYSICAL holder, so the lineage table shows where files live)
-    val written = spark.read.schema(StructType(info.schema.fields)).parquet(dataPath)
-    val newMetrics = written.groupBy((keyCols :+ "salt").map(col): _*)
-      .agg(count(lit(1)).as("rows"), min("cell").as("min_cell"), max("cell").as("max_cell"))
-      .withColumn("snapshot", lit(to))
-    val inherited = (srcPhys.keySet -- pTouched.toSet).toSeq.sortBy(_.relpath)
-    val inhRows = inherited.map(k =>
-      if (temporal) Row(k.bin.get, k.prefix) else Row(k.prefix))
-    val inhSchema =
-      if (temporal) StructType(Seq(
-        StructField("time_bin", IntegerType),
-        StructField("cell_prefix", org.apache.spark.sql.types.LongType)))
-      else StructType(Seq(StructField("cell_prefix", org.apache.spark.sql.types.LongType)))
-    val inhDf = spark.createDataFrame(spark.sparkContext.parallelize(inhRows, 1), inhSchema)
-    val carried = spark.read.parquet(s"$root/_metrics/snapshot=$from")
-      .join(broadcast(inhDf), keyCols, "left_semi")
-    newMetrics.unionByName(carried, allowMissingColumns = false)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_metrics/snapshot=$to")
-
-    val merged = spark.read.parquet(s"$root/_metrics/snapshot=$to")
-    val perKey = merged.groupBy(keyCols.map(col): _*)
-      .agg(sum("rows").as("rows"), min("min_cell").as("min_cell"), max("max_cell").as("max_cell"))
-      .collect()
-    val writtenKeys = keysIn(info, newMetrics).toSet
-    val sourcesMap: Map[PKey, String] =
-      inherited.map(k => k -> srcPhys(k)).toMap ++ writtenKeys.map(_ -> to)
-
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    node.put("snapshot", to)
-    node.put("res", info.res)
-    node.put("prefix_res", info.prefixRes)
-    node.put("salts", info.salts)
-    info.period.foreach(node.put("period", _))
-    info.dtg.foreach(node.put("dtg", _))
-    node.set[com.fasterxml.jackson.databind.node.ObjectNode]("schema",
-      mapper.readTree(info.schema.json).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-    val parts = node.putArray("partitions")
-    val keyed = perKey.map { r =>
-      val off = if (temporal) 1 else 0
-      val k = if (temporal) PKey(Some(r.getInt(0)), r.getLong(1)) else PKey(None, r.getLong(0))
-      (k, r.getLong(off + 1), r.getLong(off + 2), r.getLong(off + 3))
-    }
-    keyed.sortBy(_._1.relpath).foreach { case (k, rows, minC, maxC) =>
-      val e = parts.addObject()
-      k.bin.foreach(e.put("time_bin", _))
-      e.put("cell_prefix", k.prefix)
-      e.put("rows", rows)
-      e.put("min_cell", minC)
-      e.put("max_cell", maxC)
-    }
-    val srcs = node.putObject("sources")
-    sourcesMap.toSeq.sortBy(_._1.relpath).foreach { case (k, s) => srcs.put(k.sourceKey, s) }
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_manifests"))
-    writeString(f, s"$root/_manifests/$to.json", mapper.writeValueAsString(node))
-
-    // delta-scoped index rebuilds + expand-only stats, then commit. The
-    // removed/added plans are lazy match scans the loop and the stats
-    // delta would otherwise re-execute several times (review r5b #5) —
-    // cache them for the duration
-    val addedIndexed = index(addedUser.getOrElse(emptyUser))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val removedC = removed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      indexedColumns(spark, root, from).keys.toSeq.sorted.foreach { a =>
-        rebuildIndexScoped(spark, root, from, to, a, removedC, addedIndexed, idCol)
-      }
-      TableStats.applyMutationDelta(spark, root, from, to, removedC,
-        addedUser.getOrElse(emptyUser), lonCol, latCol)
-    } finally {
-      removedC.unpersist()
-      addedIndexed.unpersist()
-    }
-    writeString(f, s"$root/_manifests/$to.committed", "") // commit marker LAST
-    snap
-  }
-
-  /** A CQL predicate over the user columns, null-safe for mutation
-    * routing: rows where the filter evaluates NULL (e.g. `name = 'x'`
-    * with a null name) are NOT matched, per filter semantics. */
-  private def cqlPred(df: DataFrame, cql: String, lonCol: String, latCol: String,
-                      idColumn: String,
-                      props: Map[String, org.apache.spark.sql.Column]) =
-    coalesce(graft.plans.Cql.parse(cql, geomDefaults(df, lonCol, latCol) ++ props,
-      idColumn, graft.plans.Cql.arrayProps(df)), lit(false))
-
   /** Whether the scoped (file-granular) engine can serve this snapshot:
     * plain layouts always; temporal layouts once their manifest records
     * partitions (writeTemporal does since round 4) or they were
@@ -1131,40 +646,39 @@ object SpatialTable {
   private def canScope(info: ManifestInfo): Boolean =
     info.period.isEmpty || info.scoped || info.tpartitions.nonEmpty
 
-  /** The distinct partition keys a DataFrame's rows occupy. */
-  private def keysIn(info: ManifestInfo, df: DataFrame): Seq[PKey] =
-    df.select(info.partitionCols.map(col): _*).distinct().collect().toSeq.map { r =>
-      if (info.period.nonEmpty) PKey(Some(r.getInt(0)), r.getLong(1))
-      else PKey(None, r.getLong(0))
-    }
+  /** Run one mutation through the core against `from`'s manifest, with
+    * the whole-table [[rewrite]] as the fallback for unscopable
+    * snapshots. */
+  private def mutate(spark: SparkSession, root: String, from: String, to: String,
+                     idCol: String, lonCol: String, latCol: String)
+                    (run: Snapshots.Source => Unit): Snapshot = {
+    Snapshots.requireMutable(spark, root, from, to)
+    val (info, parts) = load(spark, root, from)
+    run(Snapshots.Source(parts, new Points(info, idCol, lonCol, latCol), canScope(info),
+      () => readParsed(spark, root, info, parts),
+      t => rewrite(spark, root, from, to, t, idCol, lonCol, latCol)))
+    Snapshot(to, root, info.prefixRes, info.res, info.salts)
+  }
+
+  private def cqlPred(cql: String, lonCol: String, latCol: String, idColumn: String,
+                      props: Map[String, org.apache.spark.sql.Column])(df: DataFrame) =
+    Snapshots.cqlMatch(df, cql, geomDefaults(df, lonCol, latCol) ++ props, idColumn)
 
   /** removeFeatures(filter) — new snapshot keeps the rows the filter
     * does NOT match (AccumuloDataStoreDeleteTest "delete" blocks;
     * AccumuloFeatureWriterTest "provide ability to remove features").
-    * On plain layouts this is FILE-GRANULAR: only the cell_prefix
-    * directories holding matched rows are rewritten (a spatial conjunct
-    * finds them through the pruned scan); everything else is inherited
-    * by reference. Temporal layouts fall back to the whole-table
-    * rewrite. */
+    * FILE-GRANULAR: only the cell_prefix directories holding matched
+    * rows are rewritten (a spatial conjunct finds them through the
+    * pruned scan); everything else is inherited by reference. Legacy
+    * temporal layouts fall back to the whole-table rewrite. */
   def deleteWhere(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
                   cql: String, idCol: String = "id",
                   lonCol: String = "lon", latCol: String = "lat",
-                  props: Map[String, org.apache.spark.sql.Column] = Map.empty): Snapshot = {
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    def remove(df: DataFrame): DataFrame =
-      df.where(!cqlPred(df, cql, lonCol, latCol, idCol, props))
-    val info = manifestInfo(spark, root, fromSnapshot)
-    if (!canScope(info))
-      rewrite(spark, root, fromSnapshot, toSnapshot, remove, idCol, lonCol, latCol)
-    else {
-      val src = read(spark, root, fromSnapshot)
-      val matched = src.where(cqlPred(src, cql, lonCol, latCol, idCol, props))
-      commitScoped(spark, root, fromSnapshot, toSnapshot, keysIn(info, matched), remove,
-        removed = matched, addedUser = None, mayMove = false,
-        idCol, lonCol, latCol, partitions = 32)
+                  props: Map[String, org.apache.spark.sql.Column] = Map.empty): Snapshot =
+    mutate(spark, root, fromSnapshot, toSnapshot, idCol, lonCol, latCol) { src =>
+      Snapshots.deleteWhere(spark, root, src, toSnapshot,
+        cqlPred(cql, lonCol, latCol, idCol, props), idCol, partitions = 32)
     }
-  }
 
   /**
    * removeFeatures by id set, streamed — the write-through delete path
@@ -1172,74 +686,40 @@ object SpatialTable {
    * bounded driver-side id collect). `ids` is a DataFrame with (at
    * least) the id column; old-row location goes through the id index
    * exactly like [[upsert]]'s semi-join path when one exists, else one
-   * column-complete semi-join scan. File-granular via [[commitScoped]];
-   * ids not present in the table simply match nothing.
+   * column-complete semi-join scan. File-granular; ids not present in
+   * the table simply match nothing.
    */
   def deleteIds(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
                 ids: DataFrame, idCol: String = "id",
-                lonCol: String = "lon", latCol: String = "lat"): Snapshot = {
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    val idsOnly = ids.select(idCol).distinct()
-    def remove(df: DataFrame): DataFrame = df.join(idsOnly, Seq(idCol), "left_anti")
-    val info = manifestInfo(spark, root, fromSnapshot)
-    if (!canScope(info))
-      rewrite(spark, root, fromSnapshot, toSnapshot, remove, idCol, lonCol, latCol)
-    else {
-      val matched =
-        if (indexedColumns(spark, root, fromSnapshot).contains(idCol))
-          readByIdsDf(spark, root, fromSnapshot, idCol, idsOnly).drop("attr_bucket")
-        else read(spark, root, fromSnapshot).join(idsOnly, Seq(idCol), "left_semi")
-      commitScoped(spark, root, fromSnapshot, toSnapshot, keysIn(info, matched), remove,
-        removed = matched, addedUser = None, mayMove = false,
-        idCol, lonCol, latCol, partitions = 32)
+                lonCol: String = "lon", latCol: String = "lat"): Snapshot =
+    mutate(spark, root, fromSnapshot, toSnapshot, idCol, lonCol, latCol) { src =>
+      val idsOnly = ids.select(idCol).distinct()
+      def remove(df: DataFrame): DataFrame = df.join(idsOnly, Seq(idCol), "left_anti")
+      if (!src.scopable) src.rewrite(remove)
+      else {
+        val matched =
+          if (indexedColumns(spark, root, fromSnapshot).contains(idCol))
+            readByIdsDf(spark, root, fromSnapshot, idCol, idsOnly).drop("attr_bucket")
+          else src.read().join(idsOnly, Seq(idCol), "left_semi")
+        Snapshots.commitScoped(spark, root, src, toSnapshot, Snapshots.keysIn(src.parts, matched),
+          remove, removed = matched, addedUser = None, mayMove = false, idCol, partitions = 32)
+      }
     }
-  }
 
   /** modifyFeatures(attrs, values, filter) — set columns on the rows a
     * CQL filter matches, preserving feature ids (AccumuloFeatureWriter
-    * Test "update all features based on some ecql" :122-142; updates
-    * that change the geometry re-index automatically via [[rewrite]]). */
+    * Test "update all features based on some ecql" :122-142). A set may
+    * change lon/lat (or the dtg on a temporal layout), re-homing rows to
+    * partitions outside the predicate's cover — the mover closure pulls
+    * those in. */
   def updateWhere(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
                   cql: String, sets: Map[String, org.apache.spark.sql.Column],
                   idCol: String = "id", lonCol: String = "lon", latCol: String = "lat",
-                  props: Map[String, org.apache.spark.sql.Column] = Map.empty): Snapshot = {
-    require(sets.nonEmpty, "updateWhere needs at least one column to set")
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    // materialize the match ONCE: the predicate may reference columns
-    // being set (the fixture's own filter does — name = 'fred' while
-    // setting name), and folding withColumn would re-evaluate it
-    // against already-updated values for the later sets
-    def update(df: DataFrame): DataFrame = {
-      require(sets.keys.forall(df.columns.contains),
-        s"unknown columns: ${sets.keys.filterNot(df.columns.contains).mkString(", ")}")
-      val matched = df.withColumn("__match", cqlPred(df, cql, lonCol, latCol, idCol, props))
-      sets.foldLeft(matched) { case (d, (name, value)) =>
-        d.withColumn(name, when(col("__match"), value).otherwise(col(name)))
-      }.drop("__match")
+                  props: Map[String, org.apache.spark.sql.Column] = Map.empty): Snapshot =
+    mutate(spark, root, fromSnapshot, toSnapshot, idCol, lonCol, latCol) { src =>
+      Snapshots.updateWhere(spark, root, src, toSnapshot,
+        cqlPred(cql, lonCol, latCol, idCol, props), sets, idCol, partitions = 32)
     }
-    val info = manifestInfo(spark, root, fromSnapshot)
-    if (!canScope(info))
-      rewrite(spark, root, fromSnapshot, toSnapshot, update, idCol, lonCol, latCol)
-    else {
-      val src = read(spark, root, fromSnapshot)
-      val matched = src.where(cqlPred(src, cql, lonCol, latCol, idCol, props))
-      // every row in `matched` matches — the added versions apply the
-      // sets unconditionally (same values commitScoped's transform
-      // produces for them)
-      val matchedUser = matched.drop(DerivedCols.toSeq: _*)
-      val added = sets.foldLeft(matchedUser) { case (d, (name, value)) =>
-        d.withColumn(name, value)
-      }
-      // mayMove: a set may change lon/lat (or the dtg on a temporal
-      // layout), re-homing rows to partitions outside the predicate's
-      // cover — the mover closure pulls those in
-      commitScoped(spark, root, fromSnapshot, toSnapshot, keysIn(info, matched), update,
-        removed = matched, addedUser = Some(added), mayMove = true,
-        idCol, lonCol, latCol, partitions = 32)
-    }
-  }
 
   /**
    * Writer-with-existing-fids semantics: rows of `updates` whose id
@@ -1253,73 +733,29 @@ object SpatialTable {
   def upsert(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
              updates: DataFrame, idCol: String = "id",
              lonCol: String = "lon", latCol: String = "lat",
-             idLookupLimit: Long = 10000L): Snapshot = {
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    // the caller's batch feeds several passes (dup check, count, id
-    // collect / semi-join probe, key derivation, the merge itself) —
-    // cache it so an expensive upstream plan runs once, not 4+ times
-    val incoming = updates.drop("cell", "cell_prefix", "salt", "time_bin")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // a DataFrame has no row order, so "last write wins" is undefined
-      // for duplicate ids within ONE batch — reject them loudly instead
-      // of committing duplicate feature ids (the reference writer is
-      // sequential, so the ambiguity cannot arise there)
-      val dups = incoming.groupBy(idCol).agg(count(lit(1)).as("n"))
-        .where(col("n") > 1).select(idCol).limit(5)
-        .collect().map(_.get(0)).toSeq
-      require(dups.isEmpty,
-        s"upsert batch has duplicate ids (unordered rows — last-wins is " +
-          s"undefined): ${dups.mkString(", ")}")
-      def merge(df: DataFrame): DataFrame = {
-        require(df.columns.sorted.sameElements(incoming.columns.sorted),
-          s"upsert schema mismatch: table has [${df.columns.sorted.mkString(",")}], " +
-            s"updates have [${incoming.columns.sorted.mkString(",")}]")
-        df.join(incoming.select(idCol).distinct(), Seq(idCol), "left_anti")
-          .unionByName(incoming)
-      }
-      val info = manifestInfo(spark, root, fromSnapshot)
-      if (!canScope(info))
-        rewrite(spark, root, fromSnapshot, toSnapshot, merge, idCol, lonCol, latCol)
-      else {
-        val userCols = info.schema.fieldNames.filterNot(DerivedCols).sorted
-        require(userCols.sameElements(incoming.columns.sorted),
-          s"upsert schema mismatch: table has [${userCols.mkString(",")}], " +
-            s"updates have [${incoming.columns.sorted.mkString(",")}]")
-        // old locations of replaced ids. Small batches go through the id
-        // index when one exists — per-id bucket pruning, NO table scan to
-        // find a handful of rows (VERDICT r3's "one-row upsert is a
-        // full-table job" is dead in both halves). Larger batches (or no
-        // id index) fall back to one column-complete semi-join scan.
-        val haveIdIndex = indexedColumns(spark, root, fromSnapshot).contains(idCol)
-        val oldRows =
-          if (haveIdIndex) {
-            // small batches collect their ids for the literal
-            // bucket-pruned lookup; anything larger goes through the
-            // id-index SEMI-JOIN — no driver id list, no size ceiling
-            // (ADVICE r4: the 10k OR-chain risked codegen fallback)
+             idLookupLimit: Long = 10000L): Snapshot =
+    mutate(spark, root, fromSnapshot, toSnapshot, idCol, lonCol, latCol) { src =>
+      Snapshots.upsert(spark, root, src, toSnapshot, updates, idCol, partitions = 32,
+        locate = { (s, incoming) =>
+          // old locations of replaced ids: through the id index when one
+          // exists — small batches by the literal bucket-pruned lookup
+          // (NO table scan to find a handful of rows), larger ones by the
+          // id-index semi-join (no driver id list, no size ceiling) —
+          // else one column-complete semi-join scan
+          if (!indexedColumns(spark, root, fromSnapshot).contains(idCol))
+            Snapshots.semiJoin(s, incoming, idCol)
+          else {
             val n = incoming.count()
-            if (n == 0) read(spark, root, fromSnapshot).limit(0)
+            if (n == 0) s.read().limit(0)
             else if (n <= math.min(idLookupLimit, IdPredicateLimit.toLong)) {
               val vals = incoming.select(idCol).distinct().collect().map(_.get(0)).toSeq
               readByIds(spark, root, fromSnapshot, idCol, vals).drop("attr_bucket")
             } else
               readByIdsDf(spark, root, fromSnapshot, idCol, incoming.select(idCol))
                 .drop("attr_bucket")
-          } else
-            read(spark, root, fromSnapshot)
-              .join(incoming.select(idCol).distinct(), Seq(idCol), "left_semi")
-        val pOld = keysIn(info, oldRows)
-        // new rows' homes are known without touching the table at all —
-        // derived through the SAME helper commitScoped writes with
-        val pNew = keysIn(info, withDerived(info, incoming, idCol, lonCol, latCol))
-        commitScoped(spark, root, fromSnapshot, toSnapshot, pOld ++ pNew, merge,
-          removed = oldRows, addedUser = Some(incoming), mayMove = false,
-          idCol, lonCol, latCol, partitions = 32)
-      }
-    } finally incoming.unpersist()
-  }
+          }
+        })
+    }
 
   /**
    * removeSchema analog (AccumuloDataStoreDeleteTest "delete a schema
@@ -1328,11 +764,7 @@ object SpatialTable {
    * ("keep other tables when a separate schema is deleted"); reads and
    * [[snapshots]] on the dropped root subsequently fail/return empty.
    */
-  def dropTable(spark: SparkSession, root: String): Unit = {
-    val f = fs(spark, root)
-    val p = new Path(root)
-    if (f.exists(p)) require(f.delete(p, true), s"failed to delete $root")
-  }
+  def dropTable(spark: SparkSession, root: String): Unit = Snapshots.dropTable(spark, root)
 
   /**
    * One-shot manifest upgrade for LEGACY temporal layouts (written
@@ -1350,7 +782,7 @@ object SpatialTable {
     val info = manifestInfo(spark, root, snapshotId)
     if (canScope(info)) return false
     val grouped =
-      (try {
+      try {
         spark.read.parquet(s"$root/_metrics/snapshot=$snapshotId")
           .groupBy("time_bin", "cell_prefix")
           .agg(sum("rows").as("rows"), min("min_cell").as("min_cell"),
@@ -1362,107 +794,34 @@ object SpatialTable {
           .agg(count(lit(1)).as("rows"), min("cell").as("min_cell"),
             max("cell").as("max_cell"))
           .collect()
-      }).sortBy(r => (r.getInt(0), r.getLong(1)))
-    // surgical edit of the EXISTING manifest json — every other field
-    // (schema, period, dtg, layout params) carries through verbatim
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(manifestString(spark, root, snapshotId))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val parts = node.putArray("partitions")
-    grouped.foreach { r =>
-      val e = parts.addObject()
-      e.put("time_bin", r.getInt(0))
-      e.put("cell_prefix", r.getLong(1))
-      e.put("rows", r.getLong(2))
-      e.put("min_cell", r.getLong(3))
-      e.put("max_cell", r.getLong(4))
-    }
-    writeString(fs(spark, root), s"$root/_manifests/$snapshotId.json",
-      mapper.writeValueAsString(node))
+      }
+    // a surgical edit of the committed manifest through the atomic put:
+    // every other field (schema, period, dtg, layout params) carries
+    // through verbatim, and a crash leaves the old manifest or the new one
+    Snapshots.replacePartitions(spark, root, snapshotId, grouped.map { r =>
+      Key("cell_prefix", Some(r.getInt(0)), r.getLong(1)) ->
+        Seq("rows" -> r.getLong(2), "min_cell" -> r.getLong(3), "max_cell" -> r.getLong(4))
+    }.toMap)
     true
   }
 
   /**
    * Snapshot garbage collection — the Iceberg `expire_snapshots` /
    * reference age-off analog for mutation chains: every snapshot NOT in
-   * `keep` and NOT physically referenced by a kept snapshot is deleted
-   * (data, metrics, stats, index layouts, markers, manifest). Because
-   * scoped-mutation manifests keep their `sources` maps FLATTENED
-   * (values are always physical holders), reachability is one hop: a
-   * kept snapshot's manifest + index sidecars name every snapshot whose
-   * files it still reads. Returns the expired ids.
-   *
-   * Time travel to an expired snapshot subsequently fails (that is the
-   * point); kept snapshots — including scoped ones inheriting files
-   * from retained ancestors — keep answering identically.
+   * `keep` and NOT (transitively) referenced by a retained snapshot is
+   * deleted (data, metrics, stats, index layouts, markers, manifest).
+   * Returns the expired ids. Time travel to an expired snapshot
+   * subsequently fails (that is the point); kept snapshots — including
+   * scoped ones inheriting files from retained ancestors — keep
+   * answering identically.
    */
-  def expireSnapshots(spark: SparkSession, root: String, keep: Seq[String]): Seq[String] = {
-    val f = fs(spark, root)
-    val indexNames =
-      if (!f.exists(new Path(root))) Seq.empty
-      else f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("index_"))
-    Snapshots.expire(spark, root, keep,
-      refs = s => referencedSnapshots(spark, root, s),
-      artifacts = { id =>
-        val rest =
-          if (!f.exists(new Path(s"$root/_manifests"))) Seq.empty
-          else f.listStatus(new Path(s"$root/_manifests")).toSeq.map(_.getPath.getName)
-            .filter(n => n == s"$id.json" || n.startsWith(s"$id.attr_"))
-            .map(n => s"$root/_manifests/$n")
-        Seq(s"$root/data/snapshot=$id", s"$root/_metrics/snapshot=$id",
-          s"$root/_stats/$id.json") ++
-          indexNames.map(d => s"$root/$d/snapshot=$id") ++ rest
-      })
-  }
-
-  /** Every snapshot whose PHYSICAL files snapshot `id` still reads:
-    * the data sources map plus each delta-rebuilt index layout's
-    * sources sidecar (excluding `id` itself). The complete
-    * by-reference edge set — what overwrite-safety and snapshot GC
-    * must both consult (ADVICE r4: checking only the data map let an
-    * overwrite delete index buckets a descendant inherited). */
-  private[graft] def referencedSnapshots(spark: SparkSession, root: String,
-                                         id: String): Set[String] = {
-    val i = manifestInfo(spark, root, id)
-    val dataRefs = (i.sources.values ++ i.tsources.values).toSet
-    val idxRefs = indexedColumns(spark, root, id).keys
-      .flatMap(a => indexPhysical(spark, root, id, a).values).toSet
-    (dataRefs ++ idxRefs) - id
-  }
+  def expireSnapshots(spark: SparkSession, root: String, keep: Seq[String]): Seq[String] =
+    Snapshots.expire(spark, root, keep)
 
   /** The latest COMMITTED snapshot by commit-marker modification time
-    * (ties broken by id). Bare lexical id order is wrong across mixed
-    * id schemes — a persistence-drain id like "b000000042-a" sorts
-    * before a bootstrap "s1" forever, so "latest" by name silently
-    * reads a stale snapshot (ADVICE r4); the marker's mtime is the
-    * order the commits actually happened in. */
-  def latestSnapshot(spark: SparkSession, root: String): Option[String] = {
-    val f = fs(spark, root)
-    val dir = new Path(s"$root/_manifests")
-    if (!f.exists(dir)) None
-    else {
-      val statuses = f.listStatus(dir)
-      val names = statuses.map(_.getPath.getName).toSet
-      // mtime ties happen on coarse-clock stores (object stores report
-      // second granularity): a chained drain id must outrank a
-      // bootstrap in a tie — lexical order alone would pick 's1' over
-      // 'b000000001-a' and reintroduce the stale read (review r5 #4);
-      // among drains the zero-padded ids make lexical = chain order
-      val chained = "^b\\d{9}-[a-z]$".r
-      statuses.toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          n.endsWith(".committed") &&
-            names.contains(n.stripSuffix(".committed") + ".json")
-        }
-        .sortBy { st =>
-          val id = st.getPath.getName.stripSuffix(".committed")
-          (st.getModificationTime, if (chained.findFirstIn(id).isDefined) 1 else 0, id)
-        }
-        .lastOption.map(_.getPath.getName.stripSuffix(".committed"))
-    }
-  }
+    * (ties broken by id). */
+  def latestSnapshot(spark: SparkSession, root: String): Option[String] =
+    Snapshots.latest(spark, root)
 
   def metricsTable(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/_metrics")

@@ -57,14 +57,11 @@ object TableStats {
                          attributes: Map[String, AttributeStat],
                          deleted: Long = 0L, stale: Boolean = false)
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def statsPath(root: String, snapshotId: String) =
     s"$root/_stats/$snapshotId.json"
 
   def exists(spark: SparkSession, root: String, snapshotId: String): Boolean =
-    fs(spark, root).exists(new Path(statsPath(root, snapshotId)))
+    Snapshots.fs(spark, root).exists(new Path(statsPath(root, snapshotId)))
 
   /** Render a stat value losslessly enough to order/compare after a
     * round-trip: timestamps as UTC micros, everything else as its
@@ -171,10 +168,7 @@ object TableStats {
         val e = tk.addArray(); e.add(v); e.add(c)
       }
     }
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_stats"))
-    val out = f.create(new Path(statsPath(root, snapshotId)), true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8")) finally out.close()
+    Snapshots.put(spark, statsPath(root, snapshotId), mapper.writeValueAsString(node))
   }
 
   /** Render-domain compare: timestamps render as micros and numerics as
@@ -354,22 +348,16 @@ object TableStats {
         val e = tk.addArray(); e.add(v); e.add(c)
       }
     }
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_stats"))
-    val out = f.create(new Path(statsPath(root, toSnapshot)), true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8")) finally out.close()
+    Snapshots.put(spark, statsPath(root, toSnapshot), mapper.writeValueAsString(node))
   }
 
   /** Parse the cached stats; None when never collected. */
   def cached(spark: SparkSession, root: String, snapshotId: String): Option[Stats] = {
-    val f = fs(spark, root)
+    val f = Snapshots.fs(spark, root)
     val p = new Path(statsPath(root, snapshotId))
     if (!f.exists(p)) None
     else {
-      val in = f.open(p)
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Snapshots.readText(f, p))
       val bounds = Option(n.get("bounds")).filter(_.size == 4).map(b =>
         (b.get(0).asDouble, b.get(1).asDouble, b.get(2).asDouble, b.get(3).asDouble))
       val attrs = {
@@ -397,20 +385,6 @@ object TableStats {
     }
   }
 
-  /** Whether the snapshot's manifest is an extent (GeomTable) one —
-    * point manifests always carry a top-level prefix_res (review r5c
-    * #2: the exact/estimate fallbacks must route by table kind now
-    * that extent roots are stats citizens). */
-  private def isExtent(spark: SparkSession, root: String, snapshotId: String): Boolean = {
-    val f = fs(spark, root)
-    val p = new Path(s"$root/_manifests/$snapshotId.json")
-    require(f.exists(p), s"no manifest for snapshot $snapshotId under $root")
-    val in = f.open(p)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    !new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt).has("prefix_res")
-  }
-
   /** Feature count: cached (None when stats were never collected) or
     * exact via a scan, optionally under a CQL filter — the reference's
     * stats.getCount(sft, filter, exact). Exact scans route by the
@@ -421,7 +395,7 @@ object TableStats {
                idColumn: String = "id"): Option[Long] = {
     if (exact) {
       val df =
-        if (isExtent(spark, root, snapshotId)) cql match {
+        if (Snapshots.isExtent(spark, root, snapshotId)) cql match {
           case Some(q) => GeomTable.queryCql(spark, root, snapshotId, q,
             GeomTable.manifest(spark, root, snapshotId).geom, idColumn)
           case None => GeomTable.read(spark, root, snapshotId)
@@ -462,7 +436,7 @@ object TableStats {
   def estimateCount(spark: SparkSession, root: String, snapshotId: String,
                     bbox: (Double, Double, Double, Double),
                     maxCells: Int = 4096): Long = {
-    if (isExtent(spark, root, snapshotId)) {
+    if (Snapshots.isExtent(spark, root, snapshotId)) {
       // extent roots carry per-chunk row counts in the MANIFEST (no
       // _metrics table): the estimate is the total rows of the chunks
       // the bbox's coarse XZ ranges cover — a guaranteed superset at
@@ -472,8 +446,8 @@ object TableStats {
         s"legacy extent snapshot $snapshotId has no partition stats — re-commit via rewrite")
       val ranges = graft.cells.XZ2(info.m.chunkRes)
         .ranges(bbox._1, bbox._2, bbox._3, bbox._4, 64)
-      return info.partitions.collect {
-        case (k, rows) if ranges.exists(r => k.chunk >= r.lower && k.chunk <= r.upper) => rows
+      return info.parts.partitions.keys.toSeq.collect {
+        case k if ranges.exists(r => k.value >= r.lower && k.value <= r.upper) => info.parts.rows(k)
       }.sum
     }
     val snap = SpatialTable.manifest(spark, root, snapshotId)
