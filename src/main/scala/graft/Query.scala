@@ -190,10 +190,6 @@ object QueryRunner {
   def run(spark: SparkSession, root: String, snapshotId: String, q: GraftQuery,
           lonCol: String, latCol: String, idColumn: String): DataFrame = {
     val base = table.SpatialTable.read(spark, root, snapshotId)
-    val props: Map[String, Column] =
-      if (base.columns.contains(lonCol) && base.columns.contains(latCol))
-        Map("geom" -> functions.StFunctions.fn("st_makePoint")(col(lonCol), col(latCol)))
-      else Map.empty
-    run(base, q, props, idColumn)
+    run(base, q, table.SpatialTable.geomProps(base, lonCol, latCol), idColumn)
   }
 }

@@ -193,8 +193,11 @@ object Converters {
       override def initialValue(): javax.xml.stream.XMLInputFactory = {
         val f = javax.xml.stream.XMLInputFactory.newInstance()
         // coalescing makes each text node ONE characters event (CDATA
-        // included), so "first text node" is well-defined below; DTD
-        // support off like the DOM path's default hardening posture
+        // included), so "first text node" is well-defined below. It
+        // matches the DOM path: JAXP's XPath merges adjacent text and
+        // CDATA into one text node too, so `x<![CDATA[y]]>` reads "xy"
+        // on both paths. DTD support off like the DOM path's default
+        // hardening posture
         f.setProperty(javax.xml.stream.XMLInputFactory.IS_COALESCING, java.lang.Boolean.TRUE)
         f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)
         // namespace-UNAWARE, matching the DOM path's DocumentBuilder

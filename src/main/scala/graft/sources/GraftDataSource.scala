@@ -33,31 +33,40 @@ import graft.table.{Snapshots, SpatialTable}
  * (the same contract Spark's own parquet tables have for external
  * writes). `spark.read.format("graft")` reads resolve fresh per load.
  *
- * Pushdown parity with the programmatic path: relational filters
- * translate onto the inner columnar scan (they appear as PushedFilters
- * on the parquet relation), and a conjunction of lon/lat range filters
- * upgrades the scan to [[SpatialTable.readBBox]] — cell_prefix
- * directory pruning + z-range row-group skipping + exact refine, the
- * same three levels every other entry point gets. Snapshots produced
- * by scoped mutations resolve transparently (the relation reads
- * through the manifest like [[SpatialTable.read]]).
+ * Pushdown parity with the programmatic path, for point and extent
+ * tables alike (one [[GraftRelation]]): relational filters translate
+ * onto the inner columnar scan (they appear as PushedFilters on the
+ * parquet relation) and always re-apply exactly; on top of that the
+ * pushed conjuncts pick the cheapest base:
+ *  - an equality on an attribute with a committed index layout reads
+ *    that layout (bucket-directory pruning + sorted row groups);
+ *  - else a spatial window: on point tables lon/lat bounds on both
+ *    sides route to the cell_prefix + z-range scan
+ *    ([[SpatialTable.readBBox]]); on extent tables the envelope idiom
+ *    `maxx >= a AND minx <= b AND maxy >= c AND miny <= d` routes to
+ *    [[graft.table.GeomTable.readEnvelope]] (xz_chunk pruning);
+ *  - on temporal layouts of either kind, dtg bounds prune `time_bin`
+ *    directories.
+ * Repeated bounds on a column combine to the tightest one. Snapshots
+ * produced by scoped mutations resolve transparently (the relation
+ * reads through the manifest like [[SpatialTable.read]]).
  */
 class GraftDataSource extends DataSourceRegister
     with RelationProvider with SchemaRelationProvider with CreatableRelationProvider {
 
   override def shortName(): String = "graft"
 
-  /** Both table kinds serve through the one format: the snapshot's
+  /** Both table kinds serve through the one relation: the snapshot's
     * manifest decides whether this root is a point table
     * (SpatialTable, cell_prefix layout) or an extent table (GeomTable,
     * xz_chunk layout — lines/polygons). */
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val (root, snap) = GraftRelation.resolve(spark, parameters)
-    val p2 = parameters + ("snapshot" -> snap)
-    if (Snapshots.isExtent(spark, root, snap)) GeomGraftRelation(sqlContext, p2)
-    else GraftRelation(sqlContext, p2)
+    val root = GraftRelation.rootOf(parameters)
+    // "latest" resolves by commit-marker mtime
+    val snap = parameters.getOrElse("snapshot", SpatialTable.latestSnapshot(sqlContext.sparkSession,
+      root).getOrElse(throw new IllegalArgumentException(s"no committed snapshots under $root")))
+    GraftRelation(sqlContext, parameters + ("snapshot" -> snap))
   }
 
   /** User-supplied schemas are refused rather than silently ignored:
@@ -113,8 +122,11 @@ class GraftDataSource extends DataSourceRegister
         // DSv1 may hand options through a CaseInsensitiveMap whose
         // iteration lowercases keys — accept both spellings for the
         // camelCase option names rather than silently defaulting
-        val prefixRes = parameters.get("prefixRes")
-          .orElse(parameters.get("prefixres")).getOrElse("4").toInt
+        def camel(name: String): Option[String] =
+          parameters.get(name).orElse(parameters.get(name.toLowerCase))
+        val prefixRes = camel("prefixRes").getOrElse("4").toInt
+        val indexed = parameters.get("indexed").toSeq
+          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
         val salts = parameters.getOrElse("salts", "4").toInt
         val nParts = parameters.getOrElse("partitions", "32").toInt
         // sft-style options route the save through writeConfigured, so
@@ -139,37 +151,31 @@ class GraftDataSource extends DataSourceRegister
             parameters.getOrElse("res", "12").toInt,
             parameters.getOrElse("period", "week"),
             parameters.getOrElse("partitions", "8").toInt,
-            parameters.get("chunkRes").orElse(parameters.get("chunkres"))
-              .getOrElse("4").toInt)
-          val indexed = parameters.get("indexed").toSeq
-            .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-            .filter(data.columns.contains)
-          indexed.foreach(a => GeomTable.writeAttributeIndex(spark, root, snapshot, a))
+            camel("chunkRes").getOrElse("4").toInt)
+          val present = indexed.filter(data.columns.contains)
+          present.foreach(a => GeomTable.writeAttributeIndex(spark, root, snapshot, a))
           val wantStats = parameters.get("geomesa.stats.enable") match {
             case Some(v) => v.toBoolean
-            case None => indexed.nonEmpty // configured-style write defaults on
+            case None => present.nonEmpty // configured-style write defaults on
           }
           if (wantStats && !TableStats.exists(spark, root, snapshot))
-            TableStats.collectGeom(spark, root, snapshot, indexed)
+            TableStats.collectGeom(spark, root, snapshot, present)
         } else if (sftStyle) {
           import graft.table.Sft
+          val typeName = camel("typeName").getOrElse("features")
           val sft0 = parameters.get("sft") match {
-            case Some(spec) => Sft.parse(parameters.get("typeName")
-              .orElse(parameters.get("typename")).getOrElse("features"), spec)
+            case Some(spec) => Sft.parse(typeName, spec)
             case None =>
               // synthesized from the DataFrame schema — columns whose
               // types have no sft name (structs etc.) still write; they
               // just carry no sft-level options
-              Sft.Schema(parameters.get("typeName")
-                .orElse(parameters.get("typename")).getOrElse("features"), None,
+              Sft.Schema(typeName, None,
                 data.schema.fields.toSeq.flatMap { f =>
                   sftTypeName(f.dataType).map(t => Sft.Field(f.name, t, Nil, defaultGeom = false))
                 }, Nil)
           }
           // `indexed` marks extra columns index=true; explicit options
           // append LAST so they override the spec's user data
-          val indexed = parameters.get("indexed").toSeq
-            .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSet
           val userOpts = parameters.toSeq.filter { case (k, _) =>
             k.startsWith("geomesa.") || k == "override.reserved.words"
           } ++ (if (parameters.contains("salts") &&
@@ -178,7 +184,7 @@ class GraftDataSource extends DataSourceRegister
             Seq("geomesa.z.splits" -> salts.toString) else Nil)
           val sft = sft0.copy(
             fields = sft0.fields.map { f =>
-              if (indexed(f.name) && !f.options.exists(_._1 == "index"))
+              if (indexed.contains(f.name) && !f.options.exists(_._1 == "index"))
                 f.copy(options = f.options :+ ("index" -> "true"))
               else f
             },
@@ -224,20 +230,9 @@ object GraftRelation {
       throw new IllegalArgumentException(
         "graft format needs a table root: load(root) / OPTIONS (path '...')"))
 
-  /** (root, snapshot) with "latest" resolved by commit-marker mtime. */
-  private[sources] def resolve(spark: org.apache.spark.sql.SparkSession,
-                               parameters: Map[String, String]): (String, String) = {
-    val root = rootOf(parameters)
-    val snap = parameters.get("snapshot").getOrElse(
-      SpatialTable.latestSnapshot(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots under $root")))
-    (root, snap)
-  }
-
-  /** The filter subset the relations translate onto the inner scan;
+  /** The filter subset the relation translates onto the inner scan;
     * everything the translation does not cover is declared unhandled,
-    * so Spark re-applies it above (never dropped). Shared by the point
-    * and extent relations. */
+    * so Spark re-applies it above (never dropped). */
   private[sources] def translate(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
@@ -256,236 +251,111 @@ object GraftRelation {
     case Not(c) => translate(c).map(!_)
     case _ => None
   }
+
+  /** The pushed filters as one flat list of conjuncts. */
+  private[sources] def conjuncts(filters: Seq[Filter]): Seq[Filter] = filters.flatMap {
+    case And(l, r) => conjuncts(Seq(l, r))
+    case f => Seq(f)
+  }
+
+  /** The tightest bounds the conjuncts put on `column`: the max of the
+    * lower bounds and the min of the upper ones, so a repeated bound
+    * never loosens the window (whichever order it comes in). Strict
+    * bounds count as inclusive: routing on a superset is sound because
+    * the translated filters re-apply exactly. `value` maps a literal
+    * into the bound's domain; literals it does not map are ignored. */
+  private[sources] def bounds[T](conjuncts: Seq[Filter], column: String,
+                                 value: Any => Option[T])
+                                (implicit ord: Ordering[T]): (Option[T], Option[T]) = {
+    val lo = conjuncts.collect {
+      case GreaterThan(`column`, v) => v
+      case GreaterThanOrEqual(`column`, v) => v
+    }.flatMap(value(_))
+    val hi = conjuncts.collect {
+      case LessThan(`column`, v) => v
+      case LessThanOrEqual(`column`, v) => v
+    }.flatMap(value(_))
+    (lo.reduceOption(ord.max(_, _)), hi.reduceOption(ord.min(_, _)))
+  }
 }
 
 /**
- * The extent-table (GeomTable) relation behind `format("graft")`:
- * line/polygon tables answer SQL through the same front door as point
- * tables. Pushed conjunctive bounds on the stored envelope columns —
- * the `maxx >= a AND minx <= b AND maxy >= c AND miny <= d` overlap
- * idiom — route the scan through [[graft.table.GeomTable.readEnvelope]]
- * (chunk-directory pruning + xz row-group ranges; exact for envelope
- * queries since the XZ cover is envelope-based), a `cql` option
- * compiles ECQL against the stored WKB geometry, and every translated
- * relational filter re-applies on the pruned base.
+ * The one relation behind `format("graft")`, for both table kinds. It
+ * opens the snapshot once: that manifest parse decides the kind and
+ * serves the schema and every scan. Each scan picks the cheapest base —
+ * an indexed attribute equality reads the bucket-pruned index layout,
+ * else the kind's spatial window route (see [[Snapshots.Opened.window]]),
+ * else the full snapshot — then prunes `time_bin` from pushed dtg
+ * bounds on temporal layouts, applies the `cql` option with the kind's
+ * `geom` mapping, and re-applies every translated filter exactly.
  */
-case class GeomGraftRelation(sqlContext: SQLContext,
-                             parameters: Map[String, String])
-    extends BaseRelation with PrunedFilteredScan {
-
-  import graft.table.GeomTable
-
-  private val root = GraftRelation.rootOf(parameters)
-  private def spark = sqlContext.sparkSession
-  private val snapshotId = parameters("snapshot")
-  // ONE manifest parse serves the relation's schema and every scan
-  private val info = GeomTable.ginfo(spark, root, snapshotId)
-  private val geomCol = info.m.geom
-  // attr -> bucket modulus, read ONCE (like `info`) so the indexed
-  // route costs no metadata round-trips per scan
-  private val indexedAttrs: Map[String, Option[Int]] =
-    GeomTable.indexedColumns(spark, root, snapshotId)
-
-  override val schema: StructType =
-    if (info.chunked)
-      StructType(info.readOrder.map(f => info.schema.get(f).copy(nullable = true)))
-    else
-      StructType(GeomTable.read(spark, root, info).schema.map(_.copy(nullable = true)))
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filter(GraftRelation.translate(_).isEmpty)
-
-  /** Conjunctive envelope-overlap window from the pushed filters:
-    * lower bounds on maxx/maxy, upper bounds on minx/miny. Inclusive
-    * routing is a superset of any strict bound — the translated
-    * filters re-apply exactly below. */
-  private def extractEnvelope(filters: Array[Filter]): Option[(Double, Double, Double, Double)] = {
-    def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case _ => None
-    }
-    var loMaxx: Option[Double] = None
-    var loMaxy: Option[Double] = None
-    var hiMinx: Option[Double] = None
-    var hiMiny: Option[Double] = None
-    def visit(f: Filter): Unit = f match {
-      case And(l, r) => visit(l); visit(r)
-      case GreaterThan("maxx", v) => loMaxx = num(v).orElse(loMaxx)
-      case GreaterThanOrEqual("maxx", v) => loMaxx = num(v).orElse(loMaxx)
-      case GreaterThan("maxy", v) => loMaxy = num(v).orElse(loMaxy)
-      case GreaterThanOrEqual("maxy", v) => loMaxy = num(v).orElse(loMaxy)
-      case LessThan("minx", v) => hiMinx = num(v).orElse(hiMinx)
-      case LessThanOrEqual("minx", v) => hiMinx = num(v).orElse(hiMinx)
-      case LessThan("miny", v) => hiMiny = num(v).orElse(hiMiny)
-      case LessThanOrEqual("miny", v) => hiMiny = num(v).orElse(hiMiny)
-      case _ =>
-    }
-    filters.foreach(visit)
-    for (a <- loMaxx; b <- loMaxy; c <- hiMinx; d <- hiMiny if a <= c && b <= d)
-      yield (a, b, c, d)
-  }
-
-  /** First pushed equality on an attribute with a committed index
-    * layout — the extent analog of the strategy decider's attr-equals
-    * upgrade. */
-  private def extractIndexedEq(filters: Array[Filter]): Option[(String, Any)] = {
-    def visit(f: Filter): Option[(String, Any)] = f match {
-      case EqualTo(a, v) if indexedAttrs.contains(a) => Some((a, v))
-      case And(l, r) => visit(l).orElse(visit(r))
-      case _ => None
-    }
-    filters.iterator.flatMap(f => visit(f)).nextOption()
-  }
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    // cheapest scan wins: an indexed attr equality beats the envelope
-    // route (bucket dir + sorted row groups); the translated filters —
-    // including the equality itself and any envelope bounds — re-apply
-    // exactly on whichever base is picked
-    val base = extractIndexedEq(filters) match {
-      case Some((a, v)) =>
-        GeomTable.readByAttribute(spark, root, info, a, v, indexedAttrs(a))
-          .drop("attr_bucket")
-      case None => extractEnvelope(filters) match {
-        case Some((wminx, wminy, wmaxx, wmaxy)) =>
-          GeomTable.readEnvelope(spark, root, info, wminx, wminy, wmaxx, wmaxy, 64)
-        case None => GeomTable.read(spark, root, info)
-      }
-    }
-    val withCql = parameters.get("cql") match {
-      case Some(q) => graft.plans.Cql.filter(base, q,
-        Map("geom" -> col(geomCol)), parameters.getOrElse("id", "id"))
-      case None => base
-    }
-    val filtered = filters.flatMap(GraftRelation.translate).foldLeft(withCql)(_ where _)
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.toSeq.map(col): _*)
-    projected.rdd
-  }
-}
-
 case class GraftRelation(sqlContext: SQLContext,
                          parameters: Map[String, String])
     extends BaseRelation with PrunedFilteredScan {
 
-  private val root = GraftRelation.rootOf(parameters)
+  import GraftRelation._
+
   private def spark = sqlContext.sparkSession
-  // "latest committed" resolves by commit-marker mtime, never bare
-  // lexical id order (ADVICE r4: a drain id 'b000000042-a' sorts before
-  // a bootstrap 's1' forever, silently reading the stale snapshot)
-  private val snapshotId = parameters.get("snapshot").getOrElse {
-    SpatialTable.latestSnapshot(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshots under $root"))
-  }
-  private val info = SpatialTable.manifestInfo(spark, root, snapshotId)
-  private val lonCol = parameters.getOrElse("lon", "lon")
-  private val latCol = parameters.getOrElse("lat", "lat")
-  private val cql = parameters.get("cql")
+  private val root = rootOf(parameters)
+  private val table = Snapshots.open(spark, root, parameters("snapshot"),
+    parameters.getOrElse("lon", "lon"), parameters.getOrElse("lat", "lat"))
+  // attr -> bucket modulus, read once (like the manifest) so the indexed
+  // route costs no metadata round-trips per scan
+  private val indexed: Map[String, Option[Int]] =
+    Snapshots.indexedColumns(spark, root, table.parts.snapshot)
 
   // nullable-normalized: the parquet scan underneath reports every
-  // column nullable regardless of how the writing plan typed it
-  override val schema: StructType =
-    StructType(info.readOrder.map(f => info.schema(f).copy(nullable = true)))
-
-  /** The shared translation (object GraftRelation): untranslated
-    * filters are declared unhandled, so Spark re-applies them above. */
-  private def translate(f: Filter): Option[Column] = GraftRelation.translate(f)
+  // column nullable regardless of how the writing plan typed it. Legacy
+  // extent snapshots carry no schema in the manifest.
+  override val schema: StructType = StructType(table.parts.schema match {
+    case Some(s) => table.parts.readOrder.map(f => s(f).copy(nullable = true))
+    case None => table.read(spark).schema.map(_.copy(nullable = true))
+  })
 
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters.filter(translate(_).isEmpty)
 
-  /** Conjunctive lon/lat bounds across the pushed filters — when both
-    * dimensions are bounded on both sides, the scan routes through the
-    * fully-pruned bbox path (the DSv1 analog of the reference's
-    * sparkFilterToCQLFilter spatial extraction). */
-  private def extractBBox(filters: Array[Filter]): Option[(Double, Double, Double, Double)] = {
-    def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
+  /** A dtg literal as epoch millis. Date literals are calendar days:
+    * start-of-day in the SESSION timezone (what time_bin's
+    * cast-to-timestamp uses) — Date.getTime uses the JVM default zone
+    * and could shift the bound across a bin boundary, pruning matching
+    * rows. */
+  private def millis(v: Any): Option[Long] = {
+    def zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    v match {
+      case t: java.sql.Timestamp => Some(t.getTime)
+      case t: java.time.Instant => Some(t.toEpochMilli)
+      case d: java.sql.Date => Some(d.toLocalDate.atStartOfDay(zone).toInstant.toEpochMilli)
+      case d: java.time.LocalDate => Some(d.atStartOfDay(zone).toInstant.toEpochMilli)
       case _ => None
     }
-    var (lo1, hi1, lo2, hi2) = (Option.empty[Double], Option.empty[Double],
-      Option.empty[Double], Option.empty[Double])
-    def visit(f: Filter): Unit = f match {
-      case And(l, r) => visit(l); visit(r)
-      case GreaterThan(a, v) if a == lonCol => lo1 = num(v).orElse(lo1)
-      case GreaterThanOrEqual(a, v) if a == lonCol => lo1 = num(v).orElse(lo1)
-      case LessThan(a, v) if a == lonCol => hi1 = num(v).orElse(hi1)
-      case LessThanOrEqual(a, v) if a == lonCol => hi1 = num(v).orElse(hi1)
-      case GreaterThan(a, v) if a == latCol => lo2 = num(v).orElse(lo2)
-      case GreaterThanOrEqual(a, v) if a == latCol => lo2 = num(v).orElse(lo2)
-      case LessThan(a, v) if a == latCol => hi2 = num(v).orElse(hi2)
-      case LessThanOrEqual(a, v) if a == latCol => hi2 = num(v).orElse(hi2)
-      case _ =>
-    }
-    filters.foreach(visit)
-    for (a <- lo1; b <- lo2; c <- hi1; d <- hi2 if a <= c && b <= d) yield (a, b, c, d)
   }
 
-  /** Pushed dtg bounds -> a time_bin range on temporal layouts: bins
-    * are monotone in the date, so a one-week dtg filter prunes whole
-    * day/week directories before any file is listed. Open-ended bounds
-    * prune one side. */
-  private def extractTimeBins(filters: Array[Filter]): Option[(Int, Int)] =
-    (for (p <- info.period; dtgCol <- info.dtg) yield (p, dtgCol)).flatMap { case (p, dtgCol) =>
-      def ms(v: Any): Option[Long] = v match {
-        case t: java.sql.Timestamp => Some(t.getTime)
-        case t: java.time.Instant => Some(t.toEpochMilli)
-        case d: java.sql.Date =>
-          // date literals are calendar days: resolve start-of-day in the
-          // SESSION timezone (what time_bin's cast-to-timestamp uses) —
-          // Date.getTime uses the JVM default zone and could shift the
-          // bound across a bin boundary, pruning matching rows
-          val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
-          Some(d.toLocalDate.atStartOfDay(zone).toInstant.toEpochMilli)
-        case d: java.time.LocalDate =>
-          val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
-          Some(d.atStartOfDay(zone).toInstant.toEpochMilli)
-        case _ => None
-      }
-      var lo = Option.empty[Long]
-      var hi = Option.empty[Long]
-      def visit(f: Filter): Unit = f match {
-        case And(l, r) => visit(l); visit(r)
-        case GreaterThan(a, v) if a == dtgCol => lo = ms(v).orElse(lo)
-        case GreaterThanOrEqual(a, v) if a == dtgCol => lo = ms(v).orElse(lo)
-        case LessThan(a, v) if a == dtgCol => hi = ms(v).orElse(hi)
-        case LessThanOrEqual(a, v) if a == dtgCol => hi = ms(v).orElse(hi)
-        case _ =>
-      }
-      filters.foreach(visit)
-      if (lo.isEmpty && hi.isEmpty) None
-      else {
-        val per = graft.cells.BinnedTime.period(p)
-        Some((
-          lo.map(m => graft.cells.BinnedTime.toBinned(per, m).bin.toInt)
-            .getOrElse(Int.MinValue),
-          hi.map(m => graft.cells.BinnedTime.toBinned(per, m).bin.toInt)
-            .getOrElse(Int.MaxValue)))
-      }
-    }
-
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    // bbox routing gives prefix-directory pruning + z-range row-group
-    // skipping; its inclusive refine is a superset of any strict bound,
-    // and the translated filters re-apply exactly below
-    val base0 = extractBBox(filters) match {
-      case Some(b) => SpatialTable.readBBox(spark, root, snapshotId, b, lonCol, latCol)
-      case None => SpatialTable.read(spark, root, snapshotId)
+    val cs = conjuncts(filters.toSeq)
+    val base = cs.collectFirst { case EqualTo(a, v) if indexed.contains(a) => (a, v) } match {
+      case Some((a, v)) =>
+        Snapshots.readByValue(Snapshots.readIndex(spark, root, table.parts, a), a, v, indexed(a))
+          .drop("attr_bucket")
+      case None =>
+        table.window(spark, bounds(cs, _, {
+          case n: Number => Some(n.doubleValue())
+          case _ => None
+        })).getOrElse(table.read(spark))
     }
-    val base = extractTimeBins(filters) match {
-      case Some((b0, b1)) => base0.where(col("time_bin").between(b0, b1))
-      case None => base0
+    // bins are monotone in the date, so pushed dtg bounds prune whole
+    // time_bin directories; an open end prunes one side only
+    val binned = table.parts.tier.fold(base) { case (period, dtg) =>
+      val p = graft.cells.BinnedTime.period(period)
+      def bin(ms: Option[Long], open: Int) =
+        ms.fold(open)(graft.cells.BinnedTime.toBinned(p, _).bin.toInt)
+      bounds(cs, dtg, millis) match {
+        case (None, None) => base
+        case (lo, hi) => base.where(col("time_bin").between(bin(lo, Int.MinValue), bin(hi, Int.MaxValue)))
+      }
     }
-    val withCql = cql match {
-      case Some(q) =>
-        val defaults: Map[String, Column] =
-          if (base.columns.contains(lonCol) && base.columns.contains(latCol))
-            Map("geom" -> graft.functions.StFunctions.fn("st_makePoint")(col(lonCol), col(latCol)))
-          else Map.empty
-        graft.plans.Cql.filter(base, q, defaults, parameters.getOrElse("id", "id"))
-      case None => base
-    }
+    val withCql = parameters.get("cql").fold(binned)(graft.plans.Cql.filter(binned, _,
+      table.geomProps(binned), parameters.getOrElse("id", "id")))
     val filtered = filters.flatMap(translate).foldLeft(withCql)(_ where _)
     val projected =
       if (requiredColumns.isEmpty) filtered.select()

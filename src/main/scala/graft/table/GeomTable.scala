@@ -4,9 +4,9 @@ import graft.cells.{BinnedTime, XZ2, XZ3}
 import graft.functions.StFunctions
 import graft.geom.GeomOps
 import graft.table.Snapshots.Key
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /**
  * Snapshot layout for NON-POINT geometries — the reference's XZ2/XZ3
@@ -90,12 +90,9 @@ object GeomTable {
     * on temporal layouts). `schema` None marks a legacy snapshot (plain
     * files, no chunk dirs). */
   private[graft] final case class GInfo(m: Manifest, parts: Snapshots.Parts) {
-    def snapshot: String = parts.snapshot
-    def schema: Option[StructType] = parts.schema
-    def chunked: Boolean = schema.isDefined
+    def chunked: Boolean = parts.schema.isDefined
     def scoped: Boolean = parts.scoped
     def sources: Map[Key, String] = parts.sources
-    def readOrder: Seq[String] = parts.readOrder
   }
 
   /** Add the engine-derived placement columns (envelope, xz, xz_chunk,
@@ -188,8 +185,10 @@ object GeomTable {
 
   /** Full manifest parse. Legacy (pre-round-5) manifests — no schema,
     * no partitions — parse with `schema = None`. */
-  private[graft] def ginfo(spark: SparkSession, root: String, snapshotId: String): GInfo = {
-    val n = Snapshots.manifestNode(spark, root, snapshotId)
+  private[graft] def ginfo(spark: SparkSession, root: String, snapshotId: String): GInfo =
+    parsed(Snapshots.manifestNode(spark, root, snapshotId), snapshotId)
+
+  private def parsed(n: JsonNode, snapshotId: String): GInfo = {
     val m = Manifest(
       Option(n.get("res")).map(_.asInt).getOrElse(12),
       Option(n.get("period")).map(_.asText).getOrElse("week"),
@@ -197,6 +196,36 @@ object GeomTable {
       Option(n.get("geom")).map(_.asText).getOrElse("geom"),
       Option(n.get("chunk_res")).map(_.asInt).getOrElse(4))
     GInfo(m, Snapshots.parse(n, snapshotId, ChunkCol, temporal = m.dtg.isDefined))
+  }
+
+  /** An extent snapshot for [[Snapshots.open]]: the envelope-overlap
+    * window (lower bounds on maxx/maxy, upper bounds on minx/miny)
+    * routes to [[readEnvelope]]. */
+  private[table] def opened(dir: String, n: JsonNode, id: String): Snapshots.Opened = {
+    val info = parsed(n, id)
+    new Snapshots.Opened(dir, info.parts) {
+      def read(spark: SparkSession): DataFrame = GeomTable.read(spark, root, info)
+      def geomProps(df: DataFrame): Map[String, Column] = GeomTable.geomProps(info.m.geom)
+      def window(spark: SparkSession,
+                 bound: String => (Option[Double], Option[Double])): Option[DataFrame] =
+        (bound("maxx")._1, bound("maxy")._1, bound("minx")._2, bound("miny")._2) match {
+          case (Some(x0), Some(y0), Some(x1), Some(y1)) if x0 <= x1 && y0 <= y1 =>
+            Some(readEnvelope(spark, root, info, x0, y0, x1, y1, 64))
+          case _ => None
+        }
+      /** Extent roots carry per-chunk row counts in the manifest (no
+        * `_metrics` table): the rows of the chunks the bbox's coarse XZ
+        * ranges cover, a superset at chunk granularity. */
+      def estimate(spark: SparkSession, bbox: (Double, Double, Double, Double),
+                   maxCells: Int): Long = {
+        require(info.chunked,
+          s"legacy extent snapshot $id has no partition stats — re-commit via rewrite")
+        val ranges = XZ2(info.m.chunkRes).ranges(bbox._1, bbox._2, bbox._3, bbox._4, 64)
+        info.parts.partitions.keys.toSeq.collect {
+          case k if ranges.exists(r => k.value >= r.lower && k.value <= r.upper) => info.parts.rows(k)
+        }.sum
+      }
+    }
   }
 
   /** Snapshot scan. Chunked snapshots resolve through the manifest —
@@ -213,7 +242,7 @@ object GeomTable {
     * through the delegation chain — on an object store that is 3-5 GETs
     * per query for one small JSON). */
   private[graft] def read(spark: SparkSession, root: String, info: GInfo): DataFrame =
-    if (!info.chunked) spark.read.parquet(s"$root/data/snapshot=${info.snapshot}")
+    if (!info.chunked) spark.read.parquet(s"$root/data/snapshot=${info.parts.snapshot}")
     else Snapshots.readData(spark, root, info.parts)
 
   /** The layout parameters the snapshot was WRITTEN with. Queries must
@@ -309,22 +338,24 @@ object GeomTable {
       val hi = if (bin == b1.bin.toInt) b1.offset else BinnedTime.maxOffset(p) - 1
       col("time_bin") === bin && xzPred(sfc.ranges(minx, miny, lo, maxx, maxy, hi, maxRanges))
     }.reduce(_ || _)
-    chunkPrune(read(spark, root, info), info, minx, miny, maxx, maxy)
+    // on a temporal layout readEnvelope is chunk pruning + the envelope
+    // predicate; the per-bin XZ3 ranges ride on top
+    readEnvelope(spark, root, info, minx, miny, maxx, maxy, maxRanges)
       .where(binPred)
-      .where(col("minx") <= maxx && col("maxx") >= minx &&
-        col("miny") <= maxy && col("maxy") >= miny)
       .where(unix_millis(col(dtgCol).cast("timestamp")).between(startMillis, endMillis - 1))
       .where(StFunctions.fn("st_intersects")(col(m.geom), lit(boxWkb(minx, miny, maxx, maxy))))
   }
 
-  /** QueryProcess-style CQL over the snapshot: the geometry property
-    * resolves to the stored WKB column (every st_* predicate evaluates
-    * WKB directly). Pruning comes from the readBBox/readBBoxTime entry
-    * points; this is the exact-semantics surface. */
+  /** The extent kind's CQL `geom` mapping: the stored WKB column
+    * (every st_* predicate evaluates WKB directly). */
+  private def geomProps(geomCol: String): Map[String, Column] = Map("geom" -> col(geomCol))
+
+  /** QueryProcess-style CQL over the snapshot. Pruning comes from the
+    * readBBox/readBBoxTime entry points; this is the exact-semantics
+    * surface. */
   def queryCql(spark: SparkSession, root: String, snapshotId: String, cql: String,
                geomCol: String = "geom", idColumn: String = "id"): DataFrame =
-    graft.plans.Cql.filter(read(spark, root, snapshotId), cql,
-      Map("geom" -> col(geomCol)), idColumn)
+    graft.plans.Cql.filter(read(spark, root, snapshotId), cql, geomProps(geomCol), idColumn)
 
   // ---- file-granular mutation (VERDICT r4 #1) ----------------------------
   //
@@ -374,10 +405,6 @@ object GeomTable {
       () => read(spark, root, info), t => rewrite(spark, root, from, to, t)))
   }
 
-  private def cqlPred(cql: String, geomCol: String, idColumn: String,
-                      props: Map[String, Column])(df: DataFrame): Column =
-    Snapshots.cqlMatch(df, cql, Map("geom" -> col(geomCol)) ++ props, idColumn)
-
   /** removeFeatures(filter) on an extent layout — FILE-GRANULAR on
     * chunked snapshots: only the xz_chunk directories holding matched
     * rows rewrite; everything else is inherited by reference. Legacy
@@ -387,7 +414,7 @@ object GeomTable {
                   props: Map[String, Column] = Map.empty): Unit =
     mutate(spark, root, fromSnapshot, toSnapshot) { (m, src) =>
       Snapshots.deleteWhere(spark, root, src, toSnapshot,
-        cqlPred(cql, m.geom, idColumn, props), idColumn, partitions = 8)
+        Snapshots.cqlMatch(_, cql, geomProps(m.geom) ++ props, idColumn), idColumn, partitions = 8)
     }
 
   /** modifyFeatures(attrs, values, filter) — set columns on the rows a
@@ -400,7 +427,8 @@ object GeomTable {
                   idColumn: String = "id", props: Map[String, Column] = Map.empty): Unit =
     mutate(spark, root, fromSnapshot, toSnapshot) { (m, src) =>
       Snapshots.updateWhere(spark, root, src, toSnapshot,
-        cqlPred(cql, m.geom, idColumn, props), sets, idColumn, partitions = 8)
+        Snapshots.cqlMatch(_, cql, geomProps(m.geom) ++ props, idColumn), sets, idColumn,
+        partitions = 8)
     }
 
   /**
@@ -459,17 +487,8 @@ object GeomTable {
     * pruning + sorted-attr row-group skipping. */
   def readByAttribute(spark: SparkSession, root: String, snapshotId: String,
                       attrCol: String, value: Any): DataFrame =
-    readByAttribute(spark, root, ginfo(spark, root, snapshotId), attrCol, value,
-      indexBuckets(spark, root, snapshotId, attrCol))
-
-  /** Parsed-manifest overload (the relation caches GInfo and the
-    * bucket moduli at construction — review r5b #4: the equality route
-    * must not re-parse metadata per scan). */
-  private[graft] def readByAttribute(spark: SparkSession, root: String, info: GInfo,
-                                     attrCol: String, value: Any,
-                                     buckets: Option[Int]): DataFrame =
-    Snapshots.readByValue(Snapshots.readIndex(spark, root, info.parts, attrCol),
-      attrCol, value, buckets)
+    Snapshots.readByValue(Snapshots.readIndex(spark, root, ginfo(spark, root, snapshotId).parts,
+      attrCol), attrCol, value, indexBuckets(spark, root, snapshotId, attrCol))
 
   /** Every snapshot whose PHYSICAL files snapshot `id` still reads
     * (excluding itself) — the overwrite-safety / GC edge set. */

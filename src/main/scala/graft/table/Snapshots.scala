@@ -15,6 +15,8 @@ import org.apache.spark.storage.StorageLevel
  * XZ2IndexKeySpace, XZ3IndexKeySpace) plugs only its key, and this is
  * graft's. It owns:
  *
+ *  - the one table-kind dispatch, [[open]]: one manifest parse hands
+ *    back the kind's [[Opened]] snapshot;
  *  - metadata I/O: reading and parsing a manifest once, and [[put]], the
  *    ONLY writer of a manifest, commit marker, index marker, sources
  *    sidecar or stats sidecar (temp file, then rename over the target);
@@ -81,12 +83,37 @@ private[graft] object Snapshots {
     mapper.readTree(readText(f, p))
   }
 
-  /** Extent (GeomTable) manifests never carry a top-level prefix_res;
-    * point manifests always do. A TOP-LEVEL field test, not a substring
-    * probe: both embed the Spark schema JSON, so a user column named
-    * "prefix_res" must not misroute the table. */
-  def isExtent(spark: SparkSession, root: String, id: String): Boolean =
-    !manifestNode(spark, root, id).has("prefix_res")
+  /** A snapshot opened by [[open]]: one manifest parse serves its schema
+    * and every scan. The kind supplies only its CQL `geom` mapping, its
+    * spatial window route and its partition-stats estimate; the
+    * attribute index and the `time_bin` tier are shared. */
+  abstract class Opened(val root: String, val parts: Parts) {
+    /** The full snapshot scan. */
+    def read(spark: SparkSession): DataFrame
+    /** What the CQL `geom` property resolves to on `df`. */
+    def geomProps(df: DataFrame): Map[String, Column]
+    /** The kind's pruned read for a window of pushed bounds, given the
+      * tightest (lower, upper) bound on each column; None when the
+      * bounds do not form a window the kind routes on. The caller
+      * re-applies the exact predicates on top. */
+    def window(spark: SparkSession,
+               bound: String => (Option[Double], Option[Double])): Option[DataFrame]
+    /** Rows in the partitions a bbox touches, from partition stats alone. */
+    def estimate(spark: SparkSession, bbox: (Double, Double, Double, Double),
+                 maxCells: Int): Long
+  }
+
+  /** The one table-kind dispatch. Extent (GeomTable) manifests never
+    * carry a top-level prefix_res; point manifests always do. A
+    * TOP-LEVEL field test, not a substring probe: both embed the Spark
+    * schema JSON, so a user column named "prefix_res" must not misroute
+    * the table. `lonCol`/`latCol` name a point table's coordinates. */
+  def open(spark: SparkSession, root: String, id: String,
+           lonCol: String = "lon", latCol: String = "lat"): Opened = {
+    val n = manifestNode(spark, root, id)
+    if (n.has("prefix_res")) SpatialTable.opened(root, n, id, lonCol, latCol)
+    else GeomTable.opened(root, n, id)
+  }
 
   def isCommitted(spark: SparkSession, root: String, id: String): Boolean =
     fs(spark, root).exists(new Path(markerPath(root, id)))
@@ -176,11 +203,14 @@ private[graft] object Snapshots {
     * (`rows`, plus `min_cell`/`max_cell` on points). `sources` is the
     * file-granular-mutation inheritance map — live key -> the snapshot
     * whose data directory PHYSICALLY holds it, kept flattened so chains
-    * resolve in one hop; present only on scoped snapshots. */
+    * resolve in one hop; present only on scoped snapshots. `tier` is
+    * (period, dtg column) on temporal layouts: both kinds bin the dtg
+    * with BinnedTime into the `time_bin` directory column. */
   final case class Parts(snapshot: String, keyCol: String, temporal: Boolean,
                          schema: Option[StructType],
                          partitions: Map[Key, Seq[(String, Long)]],
-                         sources: Map[Key, String], scoped: Boolean) extends KeyShape {
+                         sources: Map[Key, String], scoped: Boolean,
+                         tier: Option[(String, String)]) extends KeyShape {
     /** File columns first, partition columns last in directory order
       * (what plain partition discovery yields). */
     def readOrder: Seq[String] =
@@ -208,7 +238,9 @@ private[graft] object Snapshots {
     }.toMap
     Parts(id, keyCol, temporal,
       Option(node.get("schema")).map(s => DataType.fromJson(s.toString).asInstanceOf[StructType]),
-      parts, sources, scoped = node.has("sources"))
+      parts, sources, scoped = node.has("sources"),
+      for (p <- Option(node.get("period")); d <- Option(node.get("dtg")) if temporal)
+        yield (p.asText, d.asText))
   }
 
   private def putPartitions(node: com.fasterxml.jackson.databind.node.ObjectNode,

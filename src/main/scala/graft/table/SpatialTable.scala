@@ -1,7 +1,8 @@
 package graft.table
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -75,8 +76,10 @@ object SpatialTable {
 
   /** One manifest read: the public view plus the core's. */
   private def load(spark: SparkSession, root: String,
-                   snapshotId: String): (ManifestInfo, Snapshots.Parts) = {
-    val n = Snapshots.manifestNode(spark, root, snapshotId)
+                   snapshotId: String): (ManifestInfo, Snapshots.Parts) =
+    parsed(Snapshots.manifestNode(spark, root, snapshotId), snapshotId)
+
+  private def parsed(n: JsonNode, snapshotId: String): (ManifestInfo, Snapshots.Parts) = {
     val p = Snapshots.parse(n, snapshotId, "cell_prefix", temporal = n.has("period"))
     def intField(name: String): Int = Option(n.get(name)).map(_.asInt)
       .getOrElse(throw new IllegalStateException(s"manifest missing $name"))
@@ -92,6 +95,30 @@ object SpatialTable {
   /** Parse a snapshot's manifest (shared by every entry point). */
   def manifestInfo(spark: SparkSession, root: String, snapshotId: String): ManifestInfo =
     load(spark, root, snapshotId)._1
+
+  /** A point snapshot for [[Snapshots.open]]: the lon/lat box window
+    * routes to the cell_prefix + z-range scan. */
+  private[table] def opened(dir: String, n: JsonNode, id: String,
+                            lonCol: String, latCol: String): Snapshots.Opened = {
+    val (info, p) = parsed(n, id)
+    new Snapshots.Opened(dir, p) {
+      def read(spark: SparkSession): DataFrame = readParsed(spark, root, info, parts)
+      def geomProps(df: DataFrame): Map[String, Column] = SpatialTable.geomProps(df, lonCol, latCol)
+      def window(spark: SparkSession,
+                 bound: String => (Option[Double], Option[Double])): Option[DataFrame] =
+        (bound(lonCol), bound(latCol)) match {
+          case ((Some(x0), Some(x1)), (Some(y0), Some(y1))) if x0 <= x1 && y0 <= y1 =>
+            Some(bboxScan(read(spark), info, (x0, y0, x1, y1), lonCol, latCol))
+          case _ => None
+        }
+      /** The rows of the cell_prefix directories the bbox cover touches,
+        * from the `_metrics` lineage table. */
+      def estimate(spark: SparkSession, bbox: (Double, Double, Double, Double),
+                   maxCells: Int): Long =
+        prefixPrune(spark.read.parquet(s"$root/_metrics/snapshot=$id"), bbox, info.prefixRes, maxCells)
+          .agg(coalesce(sum("rows"), lit(0L))).collect().head.getLong(0)
+    }
+  }
 
   /** The engine-derived columns (never user data). */
   private val DerivedCols = Set("cell", "cell_prefix", "salt", "time_bin")
@@ -238,11 +265,15 @@ object SpatialTable {
   def readBBox(spark: SparkSession, root: String, snapshotId: String,
                bbox: (Double, Double, Double, Double),
                lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
-    val snap = manifest(spark, root, snapshotId)
-    prefixPrune(read(spark, root, snapshotId), bbox, snap.prefixRes)
-      .where(ZQuery.cellFilter(col("cell"), bbox, snap.res))
-      .where(col(lonCol).between(bbox._1, bbox._3) && col(latCol).between(bbox._2, bbox._4))
+    val (info, parts) = load(spark, root, snapshotId)
+    bboxScan(readParsed(spark, root, info, parts), info, bbox, lonCol, latCol)
   }
+
+  private def bboxScan(df: DataFrame, info: ManifestInfo, bbox: (Double, Double, Double, Double),
+                       lonCol: String, latCol: String): DataFrame =
+    prefixPrune(df, bbox, info.prefixRes)
+      .where(ZQuery.cellFilter(col("cell"), bbox, info.res))
+      .where(col(lonCol).between(bbox._1, bbox._3) && col(latCol).between(bbox._2, bbox._4))
 
   /**
    * cell_prefix directory pruning, SOUND under large covers: coverBBox
@@ -293,24 +324,21 @@ object SpatialTable {
                    startMillis: Long, endMillis: Long,
                    lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     require(endMillis > startMillis, s"empty interval: $startMillis..$endMillis")
-    val info = manifestInfo(spark, root, snapshotId)
+    val (info, parts) = load(spark, root, snapshotId)
     val period = info.period
       .getOrElse(throw new IllegalStateException("not a temporal layout (no period in manifest)"))
     val dtgCol = info.dtg.get
     val p = graft.cells.BinnedTime.period(period)
     val b0 = graft.cells.BinnedTime.toBinned(p, startMillis).bin.toInt
     val b1 = graft.cells.BinnedTime.toBinned(p, endMillis - 1).bin.toInt
-    prefixPrune(read(spark, root, snapshotId), bbox, info.prefixRes)
-      .where(col("time_bin").between(b0, b1))
-      .where(ZQuery.cellFilter(col("cell"), bbox, info.res))
-      .where(col(lonCol).between(bbox._1, bbox._3) && col(latCol).between(bbox._2, bbox._4))
+    bboxScan(readParsed(spark, root, info, parts).where(col("time_bin").between(b0, b1)),
+      info, bbox, lonCol, latCol)
       .where(unix_millis(col(dtgCol).cast("timestamp")).between(startMillis, endMillis - 1))
   }
 
-  /** The default property mapping CQL geometries resolve through on a
-    * lon/lat table (shared by every CQL entry point). */
-  private def geomDefaults(df: DataFrame, lonCol: String,
-                           latCol: String): Map[String, org.apache.spark.sql.Column] =
+  /** The point kind's CQL `geom` mapping, shared by every CQL entry
+    * point: `st_makePoint(lon, lat)` when `df` has both columns. */
+  private[graft] def geomProps(df: DataFrame, lonCol: String, latCol: String): Map[String, Column] =
     if (df.columns.contains(lonCol) && df.columns.contains(latCol))
       Map("geom" -> StFunctions.fn("st_makePoint")(col(lonCol), col(latCol)))
     else Map.empty
@@ -329,9 +357,9 @@ object SpatialTable {
   def queryCql(spark: SparkSession, root: String, snapshotId: String, cql: String,
                lonCol: String = "lon", latCol: String = "lat",
                idColumn: String = "id",
-               props: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame = {
+               props: Map[String, Column] = Map.empty): DataFrame = {
     val df = read(spark, root, snapshotId)
-    graft.plans.Cql.filter(df, cql, geomDefaults(df, lonCol, latCol) ++ props, idColumn)
+    graft.plans.Cql.filter(df, cql, geomProps(df, lonCol, latCol) ++ props, idColumn)
   }
 
   /**
@@ -466,7 +494,7 @@ object SpatialTable {
   def queryPlanned(spark: SparkSession, root: String, snapshotId: String, cql: String,
                    lonCol: String = "lon", latCol: String = "lat",
                    idColumn: String = "id", dtgColumn: Option[String] = Some("dtg"),
-                   props: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame = {
+                   props: Map[String, Column] = Map.empty): DataFrame = {
     import graft.plans.StrategyDecider
     // a layout is plannable only once its COMMIT MARKER exists — a
     // crashed index write leaves a data directory the planner must
@@ -477,7 +505,7 @@ object SpatialTable {
     def residual(df: DataFrame): DataFrame = d.residual match {
       case None => df
       case Some(r) =>
-        graft.plans.Cql.filter(df, r, geomDefaults(df, lonCol, latCol) ++ props, idColumn)
+        graft.plans.Cql.filter(df, r, geomProps(df, lonCol, latCol) ++ props, idColumn)
     }
     d.strategy match {
       case StrategyDecider.IdLookup(vs) =>
@@ -660,10 +688,6 @@ object SpatialTable {
     Snapshot(to, root, info.prefixRes, info.res, info.salts)
   }
 
-  private def cqlPred(cql: String, lonCol: String, latCol: String, idColumn: String,
-                      props: Map[String, org.apache.spark.sql.Column])(df: DataFrame) =
-    Snapshots.cqlMatch(df, cql, geomDefaults(df, lonCol, latCol) ++ props, idColumn)
-
   /** removeFeatures(filter) — new snapshot keeps the rows the filter
     * does NOT match (AccumuloDataStoreDeleteTest "delete" blocks;
     * AccumuloFeatureWriterTest "provide ability to remove features").
@@ -674,10 +698,11 @@ object SpatialTable {
   def deleteWhere(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
                   cql: String, idCol: String = "id",
                   lonCol: String = "lon", latCol: String = "lat",
-                  props: Map[String, org.apache.spark.sql.Column] = Map.empty): Snapshot =
+                  props: Map[String, Column] = Map.empty): Snapshot =
     mutate(spark, root, fromSnapshot, toSnapshot, idCol, lonCol, latCol) { src =>
       Snapshots.deleteWhere(spark, root, src, toSnapshot,
-        cqlPred(cql, lonCol, latCol, idCol, props), idCol, partitions = 32)
+        df => Snapshots.cqlMatch(df, cql, geomProps(df, lonCol, latCol) ++ props, idCol),
+        idCol, partitions = 32)
     }
 
   /**
@@ -713,12 +738,13 @@ object SpatialTable {
     * partitions outside the predicate's cover — the mover closure pulls
     * those in. */
   def updateWhere(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
-                  cql: String, sets: Map[String, org.apache.spark.sql.Column],
+                  cql: String, sets: Map[String, Column],
                   idCol: String = "id", lonCol: String = "lon", latCol: String = "lat",
-                  props: Map[String, org.apache.spark.sql.Column] = Map.empty): Snapshot =
+                  props: Map[String, Column] = Map.empty): Snapshot =
     mutate(spark, root, fromSnapshot, toSnapshot, idCol, lonCol, latCol) { src =>
       Snapshots.updateWhere(spark, root, src, toSnapshot,
-        cqlPred(cql, lonCol, latCol, idCol, props), sets, idCol, partitions = 32)
+        df => Snapshots.cqlMatch(df, cql, geomProps(df, lonCol, latCol) ++ props, idCol),
+        sets, idCol, partitions = 32)
     }
 
   /**

@@ -1,11 +1,9 @@
 package graft.table
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, TimestampType}
-
-import graft.cells.Cells
 
 /**
  * Cached table statistics — the reference's GeoMesaStats surface
@@ -105,29 +103,9 @@ object TableStats {
     // (writeConfigured/rewrite call this on every write and mutation)
     val df = df0.persist()
     val tracked = attributes.filter(df.columns.contains)
-    val spatial = Seq(bcols._1, bcols._2, bcols._3, bcols._4)
-      .forall(df.columns.contains)
-    val aggs =
-      Seq(count(lit(1)).as("count")) ++
-        // envelope as double regardless of the column's numeric type
-        // (decimal lon/lat tables would ClassCastException on getDouble)
-        (if (spatial) Seq(min(col(bcols._1).cast("double")).as("minx"),
-          min(col(bcols._2).cast("double")).as("miny"),
-          max(col(bcols._3).cast("double")).as("maxx"),
-          max(col(bcols._4).cast("double")).as("maxy")) else Nil) ++
-        tracked.flatMap { a =>
-          val dt = df.schema(a).dataType
-          Seq(render(dt, min(col(a))).as(s"min_$a"), render(dt, max(col(a))).as(s"max_$a"),
-            count(col(a)).as(s"count_$a"), approx_count_distinct(col(a)).as(s"card_$a"),
-            // mergeable cardinality: a DataSketches HLL over the rendered
-            // values rides along so mutation deltas can UNION instead of
-            // falling back to a lower bound (the reference's
-            // MetadataBackedStats stores exactly this sketch)
-            hll_sketch_agg(render(dt, col(a))).as(s"hll_$a"))
-        }
     val (row, tops) = try {
-      val r = df.agg(aggs.head, aggs.tail: _*).collect().head
-      val total = r.getLong(r.fieldIndex("count"))
+      val r = aggregate(df, tracked, bcols)
+      val total = r.getLong(r.fieldIndex("n"))
       val t: Map[String, Seq[(String, Long)]] =
         if (total == 0) Map.empty
         else tracked.map { a =>
@@ -139,13 +117,13 @@ object TableStats {
         }.toMap
       (r, t)
     } finally df.unpersist()
-    val total = row.getLong(row.fieldIndex("count"))
+    val total = row.getLong(row.fieldIndex("n"))
 
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     node.put("snapshot", snapshotId)
     node.put("count", total)
-    if (spatial && total > 0) {
+    if (row.schema.fieldNames.contains("minx") && total > 0) {
       val b = node.putArray("bounds")
       Seq("minx", "miny", "maxx", "maxy").foreach(f =>
         b.add(row.getDouble(row.fieldIndex(f))))
@@ -153,7 +131,7 @@ object TableStats {
     val attrsNode = node.putObject("attributes")
     tracked.foreach { a =>
       val n = attrsNode.putObject(a)
-      val cnt = row.getLong(row.fieldIndex(s"count_$a"))
+      val cnt = row.getLong(row.fieldIndex(s"n_$a"))
       n.put("count", cnt)
       n.put("cardinality", row.getLong(row.fieldIndex(s"card_$a")))
       n.put("type", df.schema(a).dataType.simpleString)
@@ -169,6 +147,31 @@ object TableStats {
       }
     }
     Snapshots.put(spark, statsPath(root, snapshotId), mapper.writeValueAsString(node))
+  }
+
+  /** One aggregation pass over `df`, shared by collection and mutation
+    * deltas: the row count `n`; the envelope `minx`..`maxy` over
+    * `bcols` when all four exist, as double regardless of the columns'
+    * numeric type (decimal lon/lat tables would ClassCastException on
+    * getDouble); and per attribute its rendered `min_`/`max_`, non-null
+    * count `n_`, approximate cardinality `card_` and `hll_` — a
+    * DataSketches HLL over the rendered values, so mutation deltas can
+    * UNION instead of falling back to a lower bound (the reference's
+    * MetadataBackedStats stores exactly this sketch). */
+  private def aggregate(df: DataFrame, attrs: Seq[String],
+                        bcols: (String, String, String, String)): Row = {
+    val (x0, y0, x1, y1) = bcols
+    val aggs = Seq(count(lit(1)).as("n")) ++
+      (if (!Seq(x0, y0, x1, y1).forall(df.columns.contains)) Nil
+       else Seq(min(col(x0).cast("double")).as("minx"), min(col(y0).cast("double")).as("miny"),
+         max(col(x1).cast("double")).as("maxx"), max(col(y1).cast("double")).as("maxy"))) ++
+      attrs.flatMap { a =>
+        val dt = df.schema(a).dataType
+        Seq(render(dt, min(col(a))).as(s"min_$a"), render(dt, max(col(a))).as(s"max_$a"),
+          count(col(a)).as(s"n_$a"), approx_count_distinct(col(a)).as(s"card_$a"),
+          hll_sketch_agg(render(dt, col(a))).as(s"hll_$a"))
+      }
+    df.agg(aggs.head, aggs.tail: _*).collect().head
   }
 
   /** Render-domain compare: timestamps render as micros and numerics as
@@ -209,23 +212,10 @@ object TableStats {
 
     def deltaOf(df: DataFrame): (Long, Option[(Double, Double, Double, Double)],
         Map[String, (Option[String], Option[String], Long, Long, Option[Array[Byte]])]) = {
-      val spatial = Seq(bcols._1, bcols._2, bcols._3, bcols._4)
-        .forall(df.columns.contains)
       val present = tracked.filter(df.columns.contains)
-      val aggs = Seq(count(lit(1)).as("n")) ++
-        (if (spatial) Seq(min(col(bcols._1).cast("double")).as("minx"),
-          min(col(bcols._2).cast("double")).as("miny"),
-          max(col(bcols._3).cast("double")).as("maxx"),
-          max(col(bcols._4).cast("double")).as("maxy")) else Nil) ++
-        present.flatMap { a =>
-          val dt = df.schema(a).dataType
-          Seq(render(dt, min(col(a))).as(s"min_$a"), render(dt, max(col(a))).as(s"max_$a"),
-            count(col(a)).as(s"n_$a"), approx_count_distinct(col(a)).as(s"card_$a"),
-            hll_sketch_agg(render(dt, col(a))).as(s"hll_$a"))
-        }
-      val r = df.agg(aggs.head, aggs.tail: _*).collect().head
+      val r = aggregate(df, present, bcols)
       val n = r.getLong(r.fieldIndex("n"))
-      val env = if (spatial && n > 0)
+      val env = if (r.schema.fieldNames.contains("minx") && n > 0)
         Some((r.getDouble(r.fieldIndex("minx")), r.getDouble(r.fieldIndex("miny")),
           r.getDouble(r.fieldIndex("maxx")), r.getDouble(r.fieldIndex("maxy"))))
       else None
@@ -387,25 +377,17 @@ object TableStats {
 
   /** Feature count: cached (None when stats were never collected) or
     * exact via a scan, optionally under a CQL filter — the reference's
-    * stats.getCount(sft, filter, exact). Exact scans route by the
-    * manifest's table kind (point or extent). */
+    * stats.getCount(sft, filter, exact). Exact scans open the snapshot
+    * as its table kind (point or extent), which maps the CQL `geom`. */
   def getCount(spark: SparkSession, root: String, snapshotId: String,
                exact: Boolean = false, cql: Option[String] = None,
                lonCol: String = "lon", latCol: String = "lat",
-               idColumn: String = "id"): Option[Long] = {
+               idColumn: String = "id"): Option[Long] =
     if (exact) {
-      val df =
-        if (Snapshots.isExtent(spark, root, snapshotId)) cql match {
-          case Some(q) => GeomTable.queryCql(spark, root, snapshotId, q,
-            GeomTable.manifest(spark, root, snapshotId).geom, idColumn)
-          case None => GeomTable.read(spark, root, snapshotId)
-        } else cql match {
-          case Some(q) => SpatialTable.queryCql(spark, root, snapshotId, q, lonCol, latCol, idColumn)
-          case None => SpatialTable.read(spark, root, snapshotId)
-        }
-      Some(df.count())
+      val t = Snapshots.open(spark, root, snapshotId, lonCol, latCol)
+      val df = t.read(spark)
+      Some(cql.fold(df)(graft.plans.Cql.filter(df, _, t.geomProps(df), idColumn)).count())
     } else cached(spark, root, snapshotId).map(_.count)
-  }
 
   /** Spatial bounds from the cached stats; whole world when stats are
     * missing or the table is empty (the reference's default). */
@@ -426,36 +408,16 @@ object TableStats {
       .map(_.topK).getOrElse(Seq.empty)
 
   /**
-   * Estimated count for a bbox query, from the per-partition lineage
-   * metrics: the total rows of the cell_prefix directories the bbox
-   * cover touches. A superset bound at prefix granularity (estimate >=
+   * Estimated count for a bbox query, from partition stats alone: the
+   * total rows of the partitions (cell_prefix directories on point
+   * tables, xz_chunk directories on extent tables) the bbox cover
+   * touches. A superset bound at partition granularity (estimate >=
    * exact; 0 exactly when no data directory intersects the box), zero
    * data I/O — the planner-side analog of the reference's stored
    * spatial histogram estimate (GeoMesaStats.getCount without exact).
    */
   def estimateCount(spark: SparkSession, root: String, snapshotId: String,
                     bbox: (Double, Double, Double, Double),
-                    maxCells: Int = 4096): Long = {
-    if (Snapshots.isExtent(spark, root, snapshotId)) {
-      // extent roots carry per-chunk row counts in the MANIFEST (no
-      // _metrics table): the estimate is the total rows of the chunks
-      // the bbox's coarse XZ ranges cover — a guaranteed superset at
-      // chunk granularity, zero data I/O, exactly like the point path
-      val info = GeomTable.ginfo(spark, root, snapshotId)
-      require(info.chunked,
-        s"legacy extent snapshot $snapshotId has no partition stats — re-commit via rewrite")
-      val ranges = graft.cells.XZ2(info.m.chunkRes)
-        .ranges(bbox._1, bbox._2, bbox._3, bbox._4, 64)
-      return info.parts.partitions.keys.toSeq.collect {
-        case k if ranges.exists(r => k.value >= r.lower && k.value <= r.upper) => info.parts.rows(k)
-      }.sum
-    }
-    val snap = SpatialTable.manifest(spark, root, snapshotId)
-    val m = spark.read.parquet(s"$root/_metrics/snapshot=$snapshotId")
-    val pruned =
-      if (Cells.coverCountBBox(bbox._1, bbox._2, bbox._3, bbox._4, snap.prefixRes) > maxCells) m
-      else m.where(col("cell_prefix").isin(
-        Cells.coverBBox(bbox._1, bbox._2, bbox._3, bbox._4, snap.prefixRes, maxCells): _*))
-    pruned.agg(coalesce(sum("rows"), lit(0L))).collect().head.getLong(0)
-  }
+                    maxCells: Int = 4096): Long =
+    Snapshots.open(spark, root, snapshotId).estimate(spark, bbox, maxCells)
 }

@@ -264,7 +264,11 @@ class ConvertersSpec extends AnyFunSuite with SparkTest {
       """<e><b>one</b><b x="v">two</b></e>""",
       """<e><b/><b>hi</b></e>""",
       // present-but-empty attribute on the first sibling IS a node
-      """<e><b x="">p</b><b x="v">q</b></e>""")
+      """<e><b x="">p</b><b x="v">q</b></e>""",
+      // text adjacent to CDATA, in both orders: one text node on both
+      // paths ("xy" / "yx")
+      """<e><b>x<![CDATA[y]]></b></e>""",
+      """<e><b><![CDATA[y]]>x</b></e>""")
     val paths = Seq("/e/@a", "/e/b", "/e/b/text()", "/e/c", "/e/c/text()",
       "b", "c/d", "@a", "e/b", "b/@x")
     // every path is inside the simple subset -> the fast group
