@@ -183,13 +183,14 @@ object QueryRunner {
     }
   }
 
-  /** Run against an indexed SpatialTable snapshot (the reference's
-    * DataStore.getFeatureSource(type).getFeatures(query) path): the CQL
-    * spatial conjuncts drive SpatialFilterRule pushdown over the
-    * snapshot scan. */
+  /** Run against a table snapshot of either kind (the reference's
+    * DataStore.getFeatureSource(type).getFeatures(query) path), with the
+    * kind's `geom` mapping: on point tables the CQL spatial conjuncts
+    * drive SpatialFilterRule pushdown over the snapshot scan. */
   def run(spark: SparkSession, root: String, snapshotId: String, q: GraftQuery,
           lonCol: String, latCol: String, idColumn: String): DataFrame = {
-    val base = table.SpatialTable.read(spark, root, snapshotId)
-    run(base, q, table.SpatialTable.geomProps(base, lonCol, latCol), idColumn)
+    val t = table.Snapshots.open(spark, root, snapshotId, lonCol, latCol)
+    val base = t.read(spark)
+    run(base, q, t.geomProps(base), idColumn)
   }
 }

@@ -479,7 +479,7 @@ object SparkEntry {
       StFunctions.register(s)
       val root = tableRoot("attr", dir)
       prepareTables(s, dir)
-      graft.table.SpatialTable.readByAttribute(s, root, "s1", "event_type", "click", buckets = 8)
+      graft.table.SpatialTable.readByAttribute(s, root, "s1", "event_type", "click")
         .select("event_id")
     }),
 
@@ -504,7 +504,7 @@ object SparkEntry {
       val root = tableRoot("idix", dir)
       prepareTables(s, dir)
       graft.table.SpatialTable.readByIds(s, root, "s1", "event_id",
-          Seq(5L, 77L, 1234L, 4321L, 999999999L), buckets = 8)
+          Seq(5L, 77L, 1234L, 4321L, 999999999L))
         .selectExpr("event_id")
     }),
 

@@ -56,13 +56,13 @@ object Transforms {
   def hashAttribute(df: DataFrame, attribute: String, modulo: Int,
                     hashCol: String = "hash"): DataFrame = {
     require(modulo > 0, s"modulo must be positive: $modulo")
-    df.withColumn(hashCol, bucketOf(col(attribute), modulo))
+    df.withColumn(hashCol, hashBucket(col(attribute), modulo))
   }
 
   // abs AFTER widening to long: abs(Int.MinValue) stays negative in
   // 32 bits, which would put a hashCode of exactly -2^31 outside
   // [0, modulo) (and matches the oracle, which abs-es over BIGINT)
-  private def bucketOf(attr: Column, modulo: Int): Column =
+  private def hashBucket(attr: Column, modulo: Int): Column =
     (abs(javaHash(attr).cast("long")) % lit(modulo)).cast("int")
 
   /** HashAttributeColorProcess analog: the same bucket mapped onto the
@@ -73,7 +73,7 @@ object Transforms {
   def hashAttributeColor(df: DataFrame, attribute: String, modulo: Int,
                          hashCol: String = "hash"): DataFrame = {
     require(modulo > 0, s"modulo must be positive: $modulo")
-    val bucket = bucketOf(col(attribute), modulo)
+    val bucket = hashBucket(col(attribute), modulo)
     df.withColumn(hashCol, element_at(lit(Colors), (bucket % Colors.length) + 1))
   }
 

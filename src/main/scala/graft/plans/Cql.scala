@@ -72,6 +72,13 @@ object Cql {
             idColumn: String = "id", arrayProps: Set[String] = Set.empty): Column =
     new Parser(cql, props, idColumn, arrayProps).compile()
 
+  /** `cs` OR-ed as a balanced tree (false when empty): Spark overflows
+    * the stack converting a left-deep chain of ~300 disjuncts. */
+  private[graft] def disjunction(cs: Seq[Column]): Column =
+    if (cs.isEmpty) lit(false)
+    else if (cs.size == 1) cs.head
+    else { val (a, b) = cs.splitAt(cs.size / 2); disjunction(a) || disjunction(b) }
+
   /** `df.where(cql)`. Multi-valued (List) attributes are detected from
     * the schema automatically: a comparison on an ArrayType column
     * matches when ANY element satisfies it — the reference's semantics
@@ -405,7 +412,7 @@ object Cql {
         case t: TIdent if t.s.equalsIgnoreCase("IN") =>
           pos += 1
           val vs = inValues()
-          val c = anyOf(x => vs.tail.foldLeft(x === vs.head)((acc, v) => acc || x === v))
+          val c = anyOf(x => disjunction(vs.map(x === _)))
           if (negated) !c else c
         case t: TIdent if t.s.equalsIgnoreCase("LIKE") =>
           pos += 1
@@ -456,7 +463,7 @@ object Cql {
 
     private def inList(lhs: Column): Column = {
       val vs = inValues()
-      vs.tail.foldLeft(lhs === vs.head)((acc, v) => acc || lhs === v)
+      disjunction(vs.map(lhs === _))
     }
 
     private def stringLit(): String = next() match {

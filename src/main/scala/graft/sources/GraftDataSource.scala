@@ -103,7 +103,7 @@ class GraftDataSource extends DataSourceRegister
           // silently break its resolved reads. The edge set covers BOTH
           // the data sources maps and every delta-rebuilt index layout's
           // sources sidecar (ADVICE r4: a descendant can rewrite all its
-          // data prefixes yet still inherit attr_buckets from here)
+          // data prefixes yet still inherit index buckets from here)
           val refs = SpatialTable.snapshots(spark, root).filter(_ != snapshot)
             .filter(Snapshots.referencedSnapshots(spark, root, _).contains(snapshot))
           require(refs.isEmpty,
@@ -260,21 +260,22 @@ object GraftRelation {
 
   /** The tightest bounds the conjuncts put on `column`: the max of the
     * lower bounds and the min of the upper ones, so a repeated bound
-    * never loosens the window (whichever order it comes in). Strict
+    * never loosens the window (whichever order it comes in). `value`
+    * maps a literal into the bound's domain, `below` a strict upper
+    * bound's literal; literals they do not map are ignored. Other strict
     * bounds count as inclusive: routing on a superset is sound because
-    * the translated filters re-apply exactly. `value` maps a literal
-    * into the bound's domain; literals it does not map are ignored. */
+    * the translated filters re-apply exactly. */
   private[sources] def bounds[T](conjuncts: Seq[Filter], column: String,
-                                 value: Any => Option[T])
+                                 value: Any => Option[T], below: Any => Option[T])
                                 (implicit ord: Ordering[T]): (Option[T], Option[T]) = {
     val lo = conjuncts.collect {
-      case GreaterThan(`column`, v) => v
-      case GreaterThanOrEqual(`column`, v) => v
-    }.flatMap(value(_))
+      case GreaterThan(`column`, v) => value(v)
+      case GreaterThanOrEqual(`column`, v) => value(v)
+    }.flatten
     val hi = conjuncts.collect {
-      case LessThan(`column`, v) => v
-      case LessThanOrEqual(`column`, v) => v
-    }.flatMap(value(_))
+      case LessThan(`column`, v) => below(v)
+      case LessThanOrEqual(`column`, v) => value(v)
+    }.flatten
     (lo.reduceOption(ord.max(_, _)), hi.reduceOption(ord.min(_, _)))
   }
 }
@@ -319,29 +320,32 @@ case class GraftRelation(sqlContext: SQLContext,
     * start-of-day in the SESSION timezone (what time_bin's
     * cast-to-timestamp uses) — Date.getTime uses the JVM default zone
     * and could shift the bound across a bin boundary, pruning matching
-    * rows. */
-  private def millis(v: Any): Option[Long] = {
-    def zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
-    v match {
-      case t: java.sql.Timestamp => Some(t.getTime)
-      case t: java.time.Instant => Some(t.toEpochMilli)
-      case d: java.sql.Date => Some(d.toLocalDate.atStartOfDay(zone).toInstant.toEpochMilli)
-      case d: java.time.LocalDate => Some(d.atStartOfDay(zone).toInstant.toEpochMilli)
+    * rows. `strict` asks for the last millisecond a strict `dtg < v`
+    * admits: one before a whole-millisecond `v`, so `dtg < 2024-03-01`
+    * stays out of March's bin; a sub-millisecond `v` keeps its truncated
+    * millisecond, which still holds rows below it. */
+  private def millis(v: Any, strict: Boolean): Option[Long] = {
+    def day(d: java.time.LocalDate) = d.atStartOfDay(
+      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))).toInstant.toEpochMilli
+    (v match {
+      case t: java.sql.Timestamp => Some((t.getTime, t.getNanos % 1000000 == 0))
+      case t: java.time.Instant => Some((t.toEpochMilli, t.getNano % 1000000 == 0))
+      case d: java.sql.Date => Some((day(d.toLocalDate), true))
+      case d: java.time.LocalDate => Some((day(d), true))
       case _ => None
-    }
+    }).map { case (ms, whole) => if (strict && whole) ms - 1 else ms }
   }
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
     val cs = conjuncts(filters.toSeq)
     val base = cs.collectFirst { case EqualTo(a, v) if indexed.contains(a) => (a, v) } match {
-      case Some((a, v)) =>
-        Snapshots.readByValue(Snapshots.readIndex(spark, root, table.parts, a), a, v, indexed(a))
-          .drop("attr_bucket")
+      case Some((a, v)) => Snapshots.Index(root, table.parts, a, indexed(a)).lookup(spark, Seq(v))
       case None =>
-        table.window(spark, bounds(cs, _, {
+        val number: Any => Option[Double] = {
           case n: Number => Some(n.doubleValue())
           case _ => None
-        })).getOrElse(table.read(spark))
+        }
+        table.window(spark, bounds(cs, _, number, number)).getOrElse(table.read(spark))
     }
     // bins are monotone in the date, so pushed dtg bounds prune whole
     // time_bin directories; an open end prunes one side only
@@ -349,13 +353,13 @@ case class GraftRelation(sqlContext: SQLContext,
       val p = graft.cells.BinnedTime.period(period)
       def bin(ms: Option[Long], open: Int) =
         ms.fold(open)(graft.cells.BinnedTime.toBinned(p, _).bin.toInt)
-      bounds(cs, dtg, millis) match {
+      bounds(cs, dtg, millis(_, strict = false), millis(_, strict = true)) match {
         case (None, None) => base
         case (lo, hi) => base.where(col("time_bin").between(bin(lo, Int.MinValue), bin(hi, Int.MaxValue)))
       }
     }
-    val withCql = parameters.get("cql").fold(binned)(graft.plans.Cql.filter(binned, _,
-      table.geomProps(binned), parameters.getOrElse("id", "id")))
+    val withCql = parameters.get("cql").fold(binned)(table.filter(binned, _,
+      parameters.getOrElse("id", "id")))
     val filtered = filters.flatMap(translate).foldLeft(withCql)(_ where _)
     val projected =
       if (requiredColumns.isEmpty) filtered.select()

@@ -350,12 +350,19 @@ object GeomTable {
     * (every st_* predicate evaluates WKB directly). */
   private def geomProps(geomCol: String): Map[String, Column] = Map("geom" -> col(geomCol))
 
-  /** QueryProcess-style CQL over the snapshot. Pruning comes from the
-    * readBBox/readBBoxTime entry points; this is the exact-semantics
-    * surface. */
+  /** QueryProcess-style CQL over the full snapshot scan, `geom`
+    * resolving to the manifest's geometry column. */
   def queryCql(spark: SparkSession, root: String, snapshotId: String, cql: String,
-               geomCol: String = "geom", idColumn: String = "id"): DataFrame =
-    graft.plans.Cql.filter(read(spark, root, snapshotId), cql, geomProps(geomCol), idColumn)
+               idColumn: String = "id"): DataFrame = {
+    val t = Snapshots.open(spark, root, snapshotId)
+    t.filter(t.read(spark), cql, idColumn)
+  }
+
+  /** Cost-planned CQL query, as on point tables: an `id IN (...)` or
+    * `indexed_attr = 'v'` conjunct reads the matching index layout. */
+  def queryPlanned(spark: SparkSession, root: String, snapshotId: String, cql: String,
+                   idColumn: String = "id"): DataFrame =
+    Snapshots.open(spark, root, snapshotId).planned(spark, cql, idColumn)
 
   // ---- file-granular mutation (VERDICT r4 #1) ----------------------------
   //
@@ -434,15 +441,15 @@ object GeomTable {
   /**
    * Writer-with-existing-fids semantics on an extent layout: rows of
    * `updates` whose id already exists REPLACE the stored row; new ids
-   * append. Old-row location is one semi-join on the id (GeomTable has
-   * no secondary id layout — the primary scan is the index); new rows'
-   * homes derive without touching the table.
+   * append. Old rows are located through the id layout when one is
+   * committed ([[writeIdIndex]]), else by one semi-join on the id (see
+   * [[Snapshots.locate]]); new rows' homes derive without touching the
+   * table.
    */
   def upsert(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
              updates: DataFrame, idColumn: String = "id"): Unit =
     mutate(spark, root, fromSnapshot, toSnapshot) { (_, src) =>
-      Snapshots.upsert(spark, root, src, toSnapshot, updates, idColumn, partitions = 8,
-        locate = Snapshots.semiJoin(_, _, idColumn))
+      Snapshots.upsert(spark, root, src, toSnapshot, updates, idColumn, partitions = 8)
     }
 
   /** Snapshot ids present under the root, committed only. */
@@ -474,9 +481,11 @@ object GeomTable {
     Snapshots.writeIndex(spark, root, snapshotId, read(spark, root, snapshotId),
       attrCol, buckets, tier = None, sortCol = "xz")
 
-  def indexBuckets(spark: SparkSession, root: String, snapshotId: String,
-                   attrCol: String): Option[Int] =
-    Snapshots.indexMarker(spark, root, snapshotId, attrCol).map(_._1)
+  /** The id layout — the reference's IdIndex, the same physical shape
+    * as an attribute index on the id column. */
+  def writeIdIndex(spark: SparkSession, root: String, snapshotId: String,
+                   idCol: String, buckets: Int = 16): Unit =
+    writeAttributeIndex(spark, root, snapshotId, idCol, buckets)
 
   /** Committed attribute-index layouts for a snapshot. */
   def indexedColumns(spark: SparkSession, root: String,
@@ -487,8 +496,7 @@ object GeomTable {
     * pruning + sorted-attr row-group skipping. */
   def readByAttribute(spark: SparkSession, root: String, snapshotId: String,
                       attrCol: String, value: Any): DataFrame =
-    Snapshots.readByValue(Snapshots.readIndex(spark, root, ginfo(spark, root, snapshotId).parts,
-      attrCol), attrCol, value, indexBuckets(spark, root, snapshotId, attrCol))
+    Snapshots.index(spark, root, snapshotId, attrCol).lookup(spark, Seq(value))
 
   /** Every snapshot whose PHYSICAL files snapshot `id` still reads
     * (excluding itself) — the overwrite-safety / GC edge set. */

@@ -52,7 +52,7 @@ object QueryAudit {
               user: () => String = defaultUser _,
               idColumn: String = "id"): (DataFrame, Event) = {
     val t0 = System.nanoTime()
-    val df = SpatialTable.queryPlanned(spark, root, snapshotId, cql, idColumn = idColumn)
+    val df = Snapshots.open(spark, root, snapshotId).planned(spark, cql, idColumn)
     val t1 = System.nanoTime()
     val hits = df.count()
     val t2 = System.nanoTime()

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -84,9 +85,9 @@ private[graft] object Snapshots {
   }
 
   /** A snapshot opened by [[open]]: one manifest parse serves its schema
-    * and every scan. The kind supplies only its CQL `geom` mapping, its
-    * spatial window route and its partition-stats estimate; the
-    * attribute index and the `time_bin` tier are shared. */
+    * and every scan. The kind supplies only its full scan, its CQL
+    * `geom` mapping, its spatial window route and its partition-stats
+    * estimate; everything else is shared. */
   abstract class Opened(val root: String, val parts: Parts) {
     /** The full snapshot scan. */
     def read(spark: SparkSession): DataFrame
@@ -101,6 +102,36 @@ private[graft] object Snapshots {
     /** Rows in the partitions a bbox touches, from partition stats alone. */
     def estimate(spark: SparkSession, bbox: (Double, Double, Double, Double),
                  maxCells: Int): Long
+
+    /** `df` under a CQL filter, with the kind's `geom` mapping. */
+    def filter(df: DataFrame, cql: String, idCol: String,
+               props: Map[String, Column] = Map.empty): DataFrame =
+      graft.plans.Cql.filter(df, cql, geomProps(df) ++ props, idCol)
+
+    /** The cost-planned read (the reference's QueryPlanner,
+      * StrategyDecider.scala:47-63): the cheapest scan the committed
+      * layouts offer for the filter's conjuncts, then the rest of the
+      * filter as the residual. Every route answers the read columns. */
+    def planned(spark: SparkSession, cql: String, idCol: String,
+                dtgCol: Option[String] = Some("dtg"),
+                props: Map[String, Column] = Map.empty): DataFrame = {
+      import graft.plans.StrategyDecider.{AttrEquals, AttrRange, IdLookup, ZScan}
+      // only layouts with a commit marker: a crashed index write leaves
+      // a directory the planner must never route through
+      val indexed = indexedColumns(spark, root, parts.snapshot)
+      val d = graft.plans.StrategyDecider.decide(cql, idCol, indexed.keySet - idCol,
+        indexed.contains(idCol), dtgCol)
+      def index(attr: String) = Index(root, parts, attr, indexed(attr))
+      val base = d.strategy match {
+        case IdLookup(vs) => index(idCol).lookup(spark, vs)
+        // ONE scan: a per-value union would duplicate rows for repeated
+        // or cast-equal values
+        case AttrEquals(a, vs) => index(a).lookup(spark, vs.distinct)
+        case AttrRange(a, lo, hi) => index(a).range(spark, lo, hi)
+        case ZScan => read(spark)
+      }
+      d.residual.fold(base)(filter(base, _, idCol, props))
+    }
   }
 
   /** The one table-kind dispatch. Extent (GeomTable) manifests never
@@ -511,14 +542,13 @@ private[graft] object Snapshots {
 
   /**
    * Writer-with-existing-fids semantics: rows of `updates` whose id
-   * already exists REPLACE the stored row; new ids append. `locate`
-   * finds the replaced rows' old versions from the (cached, derived-
-   * column-free) batch; new rows' homes derive without touching the
-   * table.
+   * already exists REPLACE the stored row; new ids append. The replaced
+   * rows' old versions are found by [[locate]] from the (cached,
+   * derived-column-free) batch; new rows' homes derive without touching
+   * the table.
    */
   def upsert(spark: SparkSession, root: String, src: Source, to: String,
-             updates: DataFrame, idCol: String, partitions: Int,
-             locate: (Source, DataFrame) => DataFrame): Unit = {
+             updates: DataFrame, idCol: String, partitions: Int): Unit = {
     // the caller's batch feeds several passes (dup check, old-row
     // location, key derivation, the merge itself) — cache it so an
     // expensive upstream plan runs once
@@ -546,7 +576,7 @@ private[graft] object Snapshots {
       else {
         val userCols = src.parts.schema.get.fieldNames.filterNot(src.ks.derivedCols)
         require(userCols.sorted.sameElements(incoming.columns.sorted), mismatch(userCols))
-        val oldRows = locate(src, incoming)
+        val oldRows = locate(spark, root, src, incoming, idCol)
         commitScoped(spark, root, src, to,
           keysIn(src.parts, oldRows) ++ keysIn(src.parts, src.ks.derive(incoming)), merge,
           removed = oldRows, addedUser = Some(incoming), mayMove = false, idCol, partitions)
@@ -554,13 +584,25 @@ private[graft] object Snapshots {
     } finally incoming.unpersist()
   }
 
-  /** The default old-row locator: one column-complete semi-join scan. */
-  def semiJoin(src: Source, incoming: DataFrame, idCol: String): DataFrame =
-    src.read().join(incoming.select(idCol).distinct(), Seq(idCol), "left_semi")
+  /** The stored rows whose id appears in `ids`: through the id layout
+    * when one is committed (the literal lookup for a small batch, the
+    * semi-join for a larger one), else one semi-join scan. */
+  private[table] def locate(spark: SparkSession, root: String, src: Source, ids: DataFrame,
+                            idCol: String): DataFrame = {
+    val wanted = ids.select(idCol).distinct()
+    indexedColumns(spark, root, src.parts.snapshot).get(idCol) match {
+      case None => src.read().join(wanted, Seq(idCol), "left_semi")
+      case Some(buckets) =>
+        val index = Index(root, src.parts, idCol, buckets)
+        val few = wanted.limit(LiteralLimit + 1).collect()
+        if (few.length > LiteralLimit) index.lookupDf(spark, wanted)
+        else index.lookup(spark, few.map(_.get(0)).toSeq)
+    }
+  }
 
   // ---- bucketed attribute / id index ----------------------------------
 
-  def bucketOf(c: Column, n: Int): Column = pmod(xxhash64(c), lit(n)).cast("int")
+  private def bucketOf(c: Column, n: Int): Column = pmod(xxhash64(c), lit(n)).cast("int")
 
   private def indexMarkerPath(root: String, id: String, attr: String) =
     s"$root/_manifests/$id.attr_$attr.committed"
@@ -655,7 +697,7 @@ private[graft] object Snapshots {
     * inference would crash every later lookup instead of answering empty
     * (review r5b #1). Legacy extent manifests carry no schema; their
     * layouts predate empty-write support. */
-  def readIndex(spark: SparkSession, root: String, parts: Parts, attr: String): DataFrame = {
+  private def readIndex(spark: SparkSession, root: String, parts: Parts, attr: String): DataFrame = {
     val id = parts.snapshot
     val dir = s"$root/index_$attr/snapshot=$id"
     if (parts.schema.isEmpty) spark.read.parquet(dir)
@@ -673,15 +715,75 @@ private[graft] object Snapshots {
     }
   }
 
-  /** Equality scan through an index layout: plan-time bucket pruning
-    * (when the modulus is known) + sorted-attr row-group skipping. The
-    * bucket probe hashes the literal cast to the column's type —
-    * xxhash64 hashes by TYPE, so an Int literal against a BIGINT column
-    * would otherwise probe the wrong bucket and silently find nothing. */
-  def readByValue(idx: DataFrame, attr: String, value: Any, buckets: Option[Int]): DataFrame =
-    buckets.fold(idx)(n => idx.where(col("attr_bucket") ===
-        bucketOf(lit(value).cast(idx.schema(attr).dataType), n)))
-      .where(col(attr) === lit(value))
+  /** Above this many values a lookup's literal predicate flips to a
+    * semi-join (ADVICE r4: a ~10k-disjunct Catalyst predicate risks
+    * codegen fallback long before any documented limit). */
+  private val LiteralLimit = 256
+
+  /** A committed index layout of a snapshot and the lookups through it,
+    * each answering the snapshot's read columns. `buckets` is the
+    * modulus the layout's marker records, the only authority: a probe
+    * hashed with another modulus silently drops rows. None marks a
+    * pre-marker layout, probed without bucket pruning. */
+  final case class Index(root: String, parts: Parts, attr: String, buckets: Option[Int]) {
+
+    /** Equality on any of `values`. Up to [[LiteralLimit]] values become
+      * `(bucket = hash(v) AND attr = v)` disjuncts: plan-time bucket
+      * constants prune bucket directories (which the semi-join cannot),
+      * and sorted-attr row-group stats skip inside them. The probe hashes
+      * the literal cast to the column's type: xxhash64 hashes by TYPE, so
+      * an Int literal on a BIGINT column would probe the wrong bucket. */
+    def lookup(spark: SparkSession, values: Seq[Any]): DataFrame =
+      if (values.size > LiteralLimit) {
+        // the probe keeps each value's own type (the type its literal
+        // would have) and lookupDf casts it to the column's type — the
+        // same cast(lit(v), type) the literal path hashes and compares.
+        // A string rendering would be lossy (a binary id renders as
+        // "[B@...") and silently match nothing
+        val probes = values.distinct.filter(_ != null).groupBy(v => Literal(v).dataType).map {
+          case (t, vs) => spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 1),
+            StructType(Seq(StructField(attr, t))))
+        }
+        lookupDf(spark, probes.reduceOption(_ unionByName _).getOrElse(
+          empty(spark, StructType(Seq(StructField(attr, LongType))))))
+      } else {
+        val idx = readIndex(spark, root, parts, attr)
+        val dt = idx.schema(attr).dataType
+        idx.where(graft.plans.Cql.disjunction(values.map { v =>
+          val eq = col(attr) === lit(v)
+          buckets.fold(eq)(n => col("attr_bucket") === bucketOf(lit(v).cast(dt), n) && eq)
+        })).drop("attr_bucket")
+      }
+
+    /** Equality on the values of `ids`' `attr` column, with no driver-side
+      * list: a left-semi join on (bucket, attr), the probe hashed with the
+      * SAME hash-of-cast the writer used. */
+    def lookupDf(spark: SparkSession, ids: DataFrame): DataFrame = {
+      val idx = readIndex(spark, root, parts, attr)
+      val probe = ids.select(col(attr).cast(idx.schema(attr).dataType).as(attr)).distinct()
+      val joined = buckets match {
+        case Some(n) =>
+          idx.join(probe.withColumn("attr_bucket", bucketOf(col(attr), n)),
+            Seq("attr_bucket", attr), "left_semi")
+        case None => idx.join(probe, Seq(attr), "left_semi")
+      }
+      // a using-columns join fronts the join keys — restore the read order
+      joined.select(idx.columns.filterNot(_ == "attr_bucket").toSeq.map(col): _*)
+    }
+
+    /** `lo <= attr <= hi`, skipping on every bucket's sorted row groups.
+      * The bounds cast to the column's type, so a string "10" against a
+      * BIGINT column compares numerically. */
+    def range(spark: SparkSession, lo: Any, hi: Any): DataFrame = {
+      val idx = readIndex(spark, root, parts, attr)
+      val dt = idx.schema(attr).dataType
+      idx.where(col(attr).between(lit(lo).cast(dt), lit(hi).cast(dt))).drop("attr_bucket")
+    }
+  }
+
+  /** `attr`'s committed index layout in snapshot `id`. */
+  def index(spark: SparkSession, root: String, id: String, attr: String): Index =
+    Index(root, open(spark, root, id).parts, attr, indexMarker(spark, root, id, attr).map(_._1))
 
   /**
    * Delta-scoped index rebuild: only the buckets where a mutated row's

@@ -386,7 +386,7 @@ object TableStats {
     if (exact) {
       val t = Snapshots.open(spark, root, snapshotId, lonCol, latCol)
       val df = t.read(spark)
-      Some(cql.fold(df)(graft.plans.Cql.filter(df, _, t.geomProps(df), idColumn)).count())
+      Some(cql.fold(df)(t.filter(df, _, idColumn)).count())
     } else cached(spark, root, snapshotId).map(_.count)
 
   /** Spatial bounds from the cached stats; whole world when stats are

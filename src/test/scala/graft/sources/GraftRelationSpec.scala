@@ -138,10 +138,13 @@ class GraftRelationSpec extends AnyFunSuite with SparkTest {
     val rows = (0 until 60).map { i =>
       (s"id$i", 10.0 + (i % 10) * 0.01, 20.0, ts(f"2024-${1 + i % 3}%02d-10 12:00:00"))
     }
+    def utc(s: String) = Timestamp.from(java.time.Instant.parse(s))
     // one table per literal kind: a Timestamp dtg column takes Timestamp
-    // bounds, a DateType one Date bounds
+    // bounds (and holds one row 0.3 ms into March), a DateType one Date
+    // bounds
     val literals = Seq[(String => Any, DataFrame)](
-      (ts, rows.toDF("id", "lon", "lat", "dtg")),
+      (ts, (rows :+ (("sub", 10.0, 20.0, utc("2024-03-01T00:00:00.000300Z"))))
+        .toDF("id", "lon", "lat", "dtg")),
       (s => Date.valueOf(s.take(10)), rows.toDF("id", "lon", "lat", "t")
         .withColumn("dtg", to_date($"t")).drop("t")))
     literals.foreach { case (at, df) =>
@@ -150,14 +153,24 @@ class GraftRelationSpec extends AnyFunSuite with SparkTest {
         period = "month", prefixRes = 3, salts = 1, partitions = 2)
       val direct = SpatialTable.read(spark, root, "t1")
       val far = Set(dirOf("2024-01-10 00:00:00"), dirOf("2024-03-10 00:00:00"))
-      // bounds route inclusively, strict ones too: every upper bound here
-      // lies inside February, so only February's bin may be listed
+      // every upper bound here lies inside February, so only February's
+      // bin may be listed: a strict bound on March's first millisecond
+      // excludes that millisecond, and with it March
       val (jan, feb, febEnd, feb29, dec) = (ge("dtg", at("2024-01-01 00:00:00")),
         ge("dtg", at("2024-02-01 00:00:00")), le("dtg", at("2024-02-28 00:00:00")),
         lt("dtg", at("2024-02-29 00:00:00")), le("dtg", at("2024-12-01 00:00:00")))
+      val beforeMarch = lt("dtg", at("2024-03-01 00:00:00"))
       assertTight(root, direct, far, Seq(
-        Seq(jan, feb, feb29), Seq(feb, jan, feb29), Seq(feb, dec, febEnd), Seq(feb, febEnd, dec)))
+        Seq(jan, feb, feb29), Seq(feb, jan, feb29), Seq(feb, dec, febEnd), Seq(feb, febEnd, dec),
+        Seq(feb, beforeMarch), Seq(beforeMarch, jan, feb)))
       assertEmpty(root, direct, Seq(feb, ge("dtg", at("2024-03-01 00:00:00")), febEnd))
+      if (df.schema("dtg").dataType == org.apache.spark.sql.types.TimestampType) {
+        // a sub-millisecond strict bound keeps its truncated millisecond:
+        // March's bin still lists, and the row below the bound answers
+        val (got, files) = scan(root, Seq(feb, lt("dtg", utc("2024-03-01T00:00:00.000500Z"))))
+        assert(got.contains("sub") && got.size == 21, got)
+        assert(files.exists(_.contains(dirOf("2024-03-10 00:00:00"))), files.mkString("\n"))
+      }
     }
   }
 

@@ -204,7 +204,7 @@ class SpatialTableSpec extends AnyFunSuite with SparkTest {
     SpatialTable.writeAttributeIndex(spark, root, "s1", "fmt", buckets = 16)
     val full = SpatialTable.read(spark, root, "s1").where(col("fmt") === "png")
       .select("image_id").collect().map(_.getString(0)).sorted.toSeq
-    val q = SpatialTable.readByAttribute(spark, root, "s1", "fmt", "png", buckets = 16)
+    val q = SpatialTable.readByAttribute(spark, root, "s1", "fmt", "png")
     val viaIdx = q.select("image_id").collect().map(_.getString(0)).sorted.toSeq
     assert(viaIdx == full && full.nonEmpty)
     // bucket-directory pruning: only fmt's hash bucket is scanned
@@ -254,7 +254,7 @@ class SpatialTableSpec extends AnyFunSuite with SparkTest {
     val ids = Seq("img000000007", "img000000123", "img_missing")
     val full = SpatialTable.read(spark, root, "s1").where(col("image_id").isin(ids: _*))
       .select("image_id").collect().map(_.getString(0)).sorted.toSeq
-    val q = SpatialTable.readByIds(spark, root, "s1", "image_id", ids, buckets = 16)
+    val q = SpatialTable.readByIds(spark, root, "s1", "image_id", ids)
     val viaIdx = q.select("image_id").collect().map(_.getString(0)).sorted.toSeq
     assert(viaIdx == full && viaIdx.size == 2) // missing id matches nothing
     // bucket-directory pruning: at most one bucket per looked-up id
@@ -273,9 +273,9 @@ class SpatialTableSpec extends AnyFunSuite with SparkTest {
     SpatialTable.writeAttributeIndex(spark, root, "s1", "w", buckets = 16)
     val some = SpatialTable.read(spark, root, "s1").select("w").head.getInt(0)
     val full = SpatialTable.read(spark, root, "s1").where(col("w") === some).count()
-    val viaLong = SpatialTable.readByAttribute(spark, root, "s1", "w", some.toLong, buckets = 16).count()
+    val viaLong = SpatialTable.readByAttribute(spark, root, "s1", "w", some.toLong).count()
     assert(viaLong == full && full > 0, s"full=$full viaLong=$viaLong")
-    val viaIds = SpatialTable.readByIds(spark, root, "s1", "w", Seq(some.toLong), buckets = 16).count()
+    val viaIds = SpatialTable.readByIds(spark, root, "s1", "w", Seq(some.toLong)).count()
     assert(viaIds == full)
   }
 

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * system themselves, nor address the `_manifests` directory — every
  * manifest, marker, sidecar and stats write goes through the core's
  * temp-file-then-rename put. (PartitionScheme's compaction journal has
- * its own rename-based commit and is out of scope.)
+ * its own rename-based commit and is out of scope.) Likewise only the
+ * core reads index layouts, and the planned read decides its strategy
+ * in one place.
  */
 class StoreWriterGuardSpec extends AnyFunSuite {
 
@@ -38,5 +40,25 @@ class StoreWriterGuardSpec extends AnyFunSuite {
       if line.contains(".create(") || line.contains("_manifests")
     } yield s"$path (code line ${n + 1}): ${line.trim}"
     assert(offences.isEmpty, offences.mkString("\n"))
+  }
+
+  private def sources(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
+  test("only the snapshot core reads index layouts, and one place decides the strategy") {
+    val core = "src/main/scala/graft/table/Snapshots.scala"
+    val all = sources(new File("src/main/scala")).map(f => f.getPath -> code(f.getPath))
+    val offences = for {
+      (path, text) <- all if path != core
+      (line, n) <- text.linesIterator.zipWithIndex
+      token <- Seq("attr_bucket", "bucketOf(", "readIndex(") if line.contains(token)
+    } yield s"$path (code line ${n + 1}) names $token: ${line.trim}"
+    assert(offences.isEmpty, offences.mkString("\n"))
+    val deciders = all.flatMap { case (path, text) =>
+      "StrategyDecider\\s*\\.\\s*decide\\b".r.findAllMatchIn(text).map(_ => path)
+    }
+    assert(deciders == Seq(core), deciders.mkString("\n"))
   }
 }
